@@ -207,100 +207,86 @@ object AggRecordCodec {
 
   // ---- Decoder (round-trip verification + consumer-side tests) ---------
 
+  /** Protobuf read position over `buf(pos until end)`; nested messages
+    * get a sub-cursor over the same array, so nothing is copied until a
+    * field's bytes are taken. */
+  private final class Cursor(buf: Array[Byte], var pos: Int, end: Int) {
+    def hasMore: Boolean = pos < end
+    def varint(): Long = {
+      var shift = 0; var res = 0L; var b = 0
+      do {
+        require(pos < end, "truncated varint")
+        b = buf(pos) & 0xFF; pos += 1
+        res |= (b & 0x7FL) << shift; shift += 7
+      } while ((b & 0x80) != 0)
+      res
+    }
+    /** Step over the next `n` bytes, returning where they start. */
+    private def skip(n: Long): Int = {
+      require(n >= 0 && n <= end - pos, s"field of $n bytes overruns its message")
+      val at = pos; pos += n.toInt; at
+    }
+    /** Step over a length-delimited field, returning where its contents start. */
+    private def field(): Int = skip(varint())
+    def message(): Cursor = { val at = field(); new Cursor(buf, at, pos) }
+    def bytes(): Array[Byte] = { val at = field(); java.util.Arrays.copyOfRange(buf, at, pos) }
+    def string(): String = { val at = field(); new String(buf, at, pos - at, StandardCharsets.UTF_8) }
+    /** Skip an unknown field by wire type, as protobuf consumers must (a
+      * real KPL may append `tags` = field 4, or future fields). */
+    def skipField(tag: Int): Unit = (tag & 7) match {
+      case 0 => varint()
+      case 1 => skip(8)
+      case 2 => field()
+      case 5 => skip(4)
+      case wt => throw new IllegalArgumentException(s"unsupported wire type $wt (tag $tag)")
+    }
+  }
+
   /** Parse wire bytes back into an Aggregate; validates magic + digest.
     *
     * Field numbers follow the public KPL aggregation schema (data = 3,
     * tags = 4), as published identically in amazon-kinesis-producer's
     * `aggregation-format.md`, amazon-kinesis-client's `messages.proto`
     * (the `software.amazon.kinesis.retrieval.kpl.Messages` the reference's
-    * `AggRecord.java:25` builds with), and awslabs/kinesis-aggregation.
-    *
-    * `legacyData4 = true` opts into reading archives written by this
-    * repo's own pre-fix encoder, which put the payload at field 4: a
-    * length-delimited field 4 is then taken as `data` when field 3 is
-    * absent. Off by default — in the real schema field 4 is `tags`, and a
-    * Tag submessage is indistinguishable from payload bytes at the wire
-    * level, so this must never be applied to records from a real KPL. */
-  def decode(bytes: Array[Byte], legacyData4: Boolean = false): Aggregate = {
+    * `AggRecord.java:25` builds with), and awslabs/kinesis-aggregation. */
+  def decode(bytes: Array[Byte]): Aggregate = {
     require(bytes.length > Magic.length + Md5Length, "too short")
-    require(bytes.take(4).sameElements(Magic), "bad magic")
-    val body = bytes.slice(4, bytes.length - Md5Length)
-    val digest = bytes.takeRight(Md5Length)
-    require(md5(body).sameElements(digest), "digest mismatch")
+    require(java.util.Arrays.equals(bytes, 0, Magic.length, Magic, 0, Magic.length), "bad magic")
+    val end = bytes.length - Md5Length
+    val md = MessageDigest.getInstance("MD5")
+    md.update(bytes, Magic.length, end - Magic.length)
+    require(java.util.Arrays.equals(md.digest(), 0, Md5Length, bytes, end, bytes.length),
+      "digest mismatch")
 
-    var pos = 0
-    def readVarint(): Long = {
-      var shift = 0; var res = 0L
-      var b = 0
-      do {
-        b = body(pos) & 0xFF; pos += 1
-        res |= (b & 0x7FL) << shift; shift += 7
-      } while ((b & 0x80) != 0)
-      res
-    }
-    def readBytes(): Array[Byte] = {
-      val len = readVarint().toInt
-      val out = body.slice(pos, pos + len); pos += len
-      out
-    }
-    // Unknown fields are skipped by wire type, as protobuf consumers must
-    // (a real KPL may append `tags` = field 4, or future fields).
-    def skipUnknown(tag: Int, rv: () => Long, skipN: Int => Unit): Unit =
-      (tag & 7) match {
-        case 0 => rv()                 // varint
-        case 1 => skipN(8)             // fixed64
-        case 2 => skipN(rv().toInt)    // length-delimited
-        case 5 => skipN(4)             // fixed32
-        case wt => throw new IllegalArgumentException(s"unsupported wire type $wt (tag $tag)")
-      }
+    val body = new Cursor(bytes, Magic.length, end)
     val pks = IndexedSeq.newBuilder[String]
     val ehks = IndexedSeq.newBuilder[String]
     val recs = IndexedSeq.newBuilder[PackedRecord]
-    while (pos < body.length) {
-      readVarint().toInt match {
-        case 0x0A => pks += new String(readBytes(), StandardCharsets.UTF_8)
-        case 0x12 => ehks += new String(readBytes(), StandardCharsets.UTF_8)
+    while (body.hasMore) {
+      body.varint().toInt match {
+        case 0x0A => pks += body.string()
+        case 0x12 => ehks += body.string()
         case 0x1A =>
-          val rec = readBytes()
-          var rp = 0
-          var pkIdx = 0; var ehkIdx = 0; var data = Array.emptyByteArray
-          var dataSeen = false
-          def rv(): Long = {
-            var shift = 0; var res = 0L; var b = 0
-            do { b = rec(rp) & 0xFF; rp += 1; res |= (b & 0x7FL) << shift; shift += 7 }
-            while ((b & 0x80) != 0)
-            res
-          }
-          while (rp < rec.length) {
-            rv().toInt match {
-              case 0x08 => pkIdx = rv().toInt
-              case 0x10 => ehkIdx = rv().toInt
-              case 0x1A => // data = field 3
-                val len = rv().toInt
-                data = rec.slice(rp, rp + len); rp += len
-                dataSeen = true
-              case 0x22 if legacyData4 && !dataSeen =>
-                // this repo's pre-fix encoder wrote the payload here
-                // (real schema: `tags`); opt-in migration path only
-                val len = rv().toInt
-                data = rec.slice(rp, rp + len); rp += len
-                dataSeen = true
-              case other => skipUnknown(other, () => rv(), n => rp += n)
+          val rec = body.message()
+          var pkIdx = 0; var ehkIdx = 0; var data: Array[Byte] = null
+          while (rec.hasMore) {
+            rec.varint().toInt match {
+              case 0x08 => pkIdx = rec.varint().toInt
+              case 0x10 => ehkIdx = rec.varint().toInt
+              case 0x1A => data = rec.bytes() // data = field 3
+              case other => rec.skipField(other)
             }
           }
           // `data` is a REQUIRED proto field — its absence means a
-          // malformed record, most likely an archive written by the
-          // pre-fix encoder (data at field 4/tag 0x22, now skipped as
-          // `tags`). Fail loudly rather than yield empty payloads;
-          // `legacyData4 = true` opts into reading such archives.
-          require(dataSeen,
-            "record has no data field (3); wire bytes may predate the field-3 fix " +
-              "(decode with legacyData4 = true to read pre-fix archives)")
+          // malformed record, most likely an archive written by this
+          // repo's pre-fix encoder (data at field 4/tag 0x22, skipped here
+          // as `tags`). Fail loudly rather than yield empty payloads.
+          require(data != null,
+            "record has no data field (3); wire bytes may predate the field-3 fix")
           recs += PackedRecord(pkIdx, ehkIdx, data)
-        case other => skipUnknown(other, () => readVarint(), n => pos += n)
+        case other => body.skipField(other)
       }
     }
-    val pkT = pks.result(); val ehkT = ehks.result(); val rs = recs.result()
-    Aggregate(pkT, ehkT, rs, body.length)
+    Aggregate(pks.result(), ehks.result(), recs.result(), end - Magic.length)
   }
 }

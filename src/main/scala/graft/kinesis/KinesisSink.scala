@@ -3,9 +3,7 @@ package graft.kinesis
 import java.math.BigInteger
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
-import scala.annotation.tailrec
-import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** One PutRecords entry: the aggregate's first PK/EHK + wire bytes
@@ -129,7 +127,7 @@ final class InMemoryKinesis(numShards: Int, failEvery: Int = 0,
       val m = s.shards.get(shardId)
       require(m != null && m.closedAt.isEmpty, s"$shardId not open")
       s.shards.put(shardId, m.copy(closedAt = Some(s.sizeOf(shardId))))
-      val mid = m.lo.add(m.hi.subtract(m.lo).divide(BigInteger.TWO))
+      val mid = ShardModel.midpoint(m.lo, m.hi)
       val c1 = s.newShardId(); val c2 = s.newShardId()
       s.shards.put(c1, ShardMeta(m.lo, mid, Seq(shardId), None))
       s.shards.put(c2, ShardMeta(mid.add(BigInteger.ONE), m.hi, Seq(shardId), None))
@@ -182,15 +180,22 @@ final class InMemoryKinesis(numShards: Int, failEvery: Int = 0,
 }
 
 /** At-least-once sink with rebuild-retry (reference:
-  * `KinesisWriter.scala:199-228`): any failed record fails the whole
-  * aggregate; on failure the aggregate is rebuilt from the raw shadow
-  * payloads with a freshly drawn EHK (so a hot shard is re-rolled) and
-  * resent. Two deliberate deviations from the reference, which has an
-  * un-incremented `failCount` (`KinesisWriter.scala:92` returns it
-  * unchanged) making its 30-retry cap dead code and its back-off a flat
-  * 2 s forever: retries here are bounded and exponential.
+  * `KinesisWriter.scala:199-228`). Packed aggregates go out in
+  * multi-entry PutRecords calls and failures are handled per entry: only
+  * the entries the service reports failed are rebuilt from their raw
+  * shadow payloads and resent. A throttled entry keeps its EHK; any other
+  * failure re-rolls a fresh one, as the reference does for every failure.
+  * Retries are bounded and exponential — a deliberate deviation from the
+  * reference, whose `failCount` is never incremented
+  * (`KinesisWriter.scala:92` returns it unchanged), making its 30-retry
+  * cap dead code and its back-off a flat 2 s forever.
   */
 object KinesisSinkSemantics {
+
+  /** PutRecords API limits per call. */
+  val PutRecordsMaxEntries: Int = 500
+  val PutRecordsMaxBytes: Long = 5L * 1024 * 1024
+  private val MaxBackoffMillis = 30000L
 
   final case class Config(
       streamName: String,
@@ -205,64 +210,43 @@ object KinesisSinkSemantics {
         * None = unthrottled (tests, unlimited transports) */
       throttle: Option[ShardThrottle] = None)
 
-  private def backoff(cfg: Config, attempt: Int): Unit =
-    Thread.sleep(math.min(cfg.backoffMillis << attempt, 30000L))
+  /** Delay before retry `attempt` (0-based): `backoffMillis` doubled per
+    * attempt, capped at 30 s. Base and exponent are clamped before the
+    * shift — 30000 << 15 still fits a Long and any base ≥ 1 reaches the
+    * cap by attempt 15 — so the shift can never wrap negative. */
+  private[kinesis] def backoffDelay(cfg: Config, attempt: Int): Long =
+    math.min(math.min(cfg.backoffMillis, MaxBackoffMillis) << math.min(attempt, 15),
+      MaxBackoffMillis)
 
-  /** Send one packed batch, rebuilding from the shadow payloads with a
-    * freshly drawn EHK on each failure (re-rolling a hot shard, reference
-    * `:217-224`). The rebuild repacks through the full gate logic: a
-    * longer replacement EHK can push an at-the-cap aggregate over 1 MiB,
-    * in which case the rebuild legitimately splits into several entries
-    * rather than failing. Rebuilt records carry `cfg.partitionKey`, as in
-    * the reference (routing is EHK-only; the shadow holds payloads only,
-    * `MyAggregator.scala:11-22`). Semantics are at-least-once: a failure
-    * after a partial multi-entry send re-sends the whole shadow.
-    */
-  def sendWithRetry(
-      batch: PackedBatch,
-      transport: PutRecordsTransport,
-      router: ShardModel.Router,
-      cfg: Config): Unit = {
-    @tailrec
-    def attempt(entries: Seq[PutEntry], failCount: Int): Unit = {
-      val ok = try entries.forall { e =>
-        // backpressure: block until the target shard (identified by its
-        // routing EHK) has 1 MiB/s + 1000 rec/s budget for this entry
-        cfg.throttle.foreach(_.acquire(e.explicitHashKey, e.data.length.toLong))
-        val res = transport.putRecords(cfg.streamName, Seq(e))
-        // service-side throttling: shrink this shard's budget before the
-        // retry (multiplicative decrease; refill recovers additively)
-        if (res.throttledRecordCount > 0)
-          cfg.throttle.foreach(_.onThrottled(e.explicitHashKey))
-        res.failedRecordCount == 0
-      }
-      catch { case scala.util.control.NonFatal(_) => false }
-      if (!ok) {
-        if (failCount >= cfg.maxRetries)
-          throw new IllegalStateException(
-            s"Exponential back-off failed after $failCount retries. Giving up.")
-        backoff(cfg, failCount)
-        val ehk = router.next()
-        val rebuilt = new BatchingIterator(
-          batch.shadow.iterator.map(p => (cfg.partitionKey, Some(ehk), p)),
-          () => router.next(), cfg.maxAggSize, cfg.maxLastSize)
-          .map(b => PutEntry(b.aggregate.partitionKey,
-            b.aggregate.explicitHashKey, b.aggregate.toRecordBytes))
-          .toSeq
-        attempt(rebuilt, failCount + 1)
-      }
-    }
-    val agg = batch.aggregate
-    attempt(Seq(PutEntry(agg.partitionKey, agg.explicitHashKey, agg.toRecordBytes)), 0)
+  /** The packing policy (R8–R15): every record keyed by
+    * `cfg.partitionKey`, gate sizes from `cfg`, one EHK drawn from
+    * `router` per aggregate — or, for a retry rebuild, every record
+    * pinned to `ehk`. */
+  private def pack(payloads: Iterator[Array[Byte]], ehk: Option[String],
+      router: ShardModel.Router, cfg: Config): Iterator[PackedBatch] =
+    new BatchingIterator(payloads.map(p => (cfg.partitionKey, ehk, p)),
+      () => router.next(), cfg.maxAggSize, cfg.maxLastSize)
+
+  /** Pack one partition's payloads. The router is seeded
+    * `routerSeed + partitionId`, which keeps routing deterministic yet
+    * de-correlated across partitions; it is returned with the batches
+    * because retry rebuilds keep drawing from it. The sink, the KPL
+    * archive writer and `q_kinesis_pack_stats` all pack through here. */
+  def packPartition(payloads: Iterator[Array[Byte]], ehks: Array[String],
+      cfg: Config, partitionId: Int): (ShardModel.Router, Iterator[PackedBatch]) = {
+    val router = new ShardModel.Router(ehks, cfg.routerSeed + partitionId)
+    (router, pack(payloads, None, router, cfg))
   }
 
-  /** Send a GROUP of packed batches as one multi-entry PutRecords call
-    * (the API takes up to 500 entries / 5 MiB) and retry only the entries
-    * the service reports failed — per-record failure handling, vs the
-    * whole-aggregate retry of [[sendWithRetry]]. A failed batch is
-    * rebuilt from its shadow and resent; a rebuild may legitimately split
-    * past the 1 MiB cap into several batches. Routing on retry depends on
-    * the failure kind: a THROTTLED entry keeps its original EHK, so the
+  /** Send a group of packed batches as one multi-entry PutRecords call and
+    * retry only the entries the service reports failed. A failed batch is
+    * rebuilt from its shadow through the full gate logic: a longer
+    * replacement EHK can push an at-the-cap aggregate over 1 MiB, in which
+    * case the rebuild splits into several batches rather than failing.
+    * Rebuilt records carry `cfg.partitionKey`, as in the reference
+    * (routing is EHK-only; the shadow holds payloads only,
+    * `MyAggregator.scala:11-22`). Routing on retry depends on the failure
+    * kind: a THROTTLED entry keeps its original EHK, so the
     * multiplicative-decrease penalty ([[ShardThrottle.onThrottled]]) lands
     * on a key that is actually reused and the next `acquire` paces the hot
     * shard at its reduced budget (the KPL rate-limiter model — a deliberate
@@ -283,6 +267,8 @@ object KinesisSinkSemantics {
         PutEntry(b.aggregate.partitionKey, b.aggregate.explicitHashKey,
           b.aggregate.toRecordBytes)
       }
+      // backpressure: block until each target shard (identified by its
+      // routing EHK) has 1 MiB/s + 1000 rec/s budget for its entry
       entries.foreach(e =>
         cfg.throttle.foreach(_.acquire(e.explicitHashKey, e.data.length.toLong)))
       val (failedIdx: Seq[Int], throttledIdx: Set[Int]) =
@@ -306,38 +292,30 @@ object KinesisSinkSemantics {
         if (failCount >= cfg.maxRetries)
           throw new IllegalStateException(
             s"Exponential back-off failed after $failCount retries. Giving up.")
-        backoff(cfg, failCount)
+        Thread.sleep(backoffDelay(cfg, failCount))
         failCount += 1
         pending = failedIdx.flatMap { i =>
           val b = pending(i)
           val ehk =
             if (throttledIdx(i)) b.aggregate.explicitHashKey // carry back-off state
             else router.next() // re-roll (reference semantics)
-          new BatchingIterator(
-            b.shadow.iterator.map(p => (cfg.partitionKey, Some(ehk), p)),
-            () => router.next(), cfg.maxAggSize, cfg.maxLastSize).toSeq
+          pack(b.shadow.iterator, Some(ehk), router, cfg).toSeq
         }
       } else pending = Seq.empty
     }
   }
 
   /** Write one partition's payload iterator: pack (R8–R15) → send (R19).
-    * Batches are grouped into multi-entry PutRecords calls bounded by
-    * `maxEntriesPerCall` and the 5 MiB call cap; per-entry failures
-    * retry selectively. Returns the number of user records written (R21). */
+    * Batches are grouped into multi-entry PutRecords calls within the
+    * API's entry and byte limits; per-entry failures retry selectively.
+    * Returns the number of user records written (R21). */
   def writePartition(
       payloads: Iterator[Array[Byte]],
       transport: PutRecordsTransport,
       ehks: Array[String],
       cfg: Config,
-      partitionId: Int = 0,
-      maxEntriesPerCall: Int = 500,
-      maxBytesPerCall: Long = 5L * 1024 * 1024): Long = {
-    // per-partition seed keeps routing deterministic yet de-correlated
-    val router = new ShardModel.Router(ehks, cfg.routerSeed + partitionId)
-    val batches = new BatchingIterator(
-      payloads.map(p => (cfg.partitionKey, Option.empty[String], p)),
-      () => router.next(), cfg.maxAggSize, cfg.maxLastSize)
+      partitionId: Int = 0): Long = {
+    val (router, batches) = packPartition(payloads, ehks, cfg, partitionId)
     var count = 0L
     val group = Seq.newBuilder[PackedBatch]
     var groupN = 0; var groupBytes = 0L
@@ -347,7 +325,7 @@ object KinesisSinkSemantics {
       group.clear(); groupN = 0; groupBytes = 0L
     }
     batches.foreach { b =>
-      if (groupN >= maxEntriesPerCall || groupBytes + b.sizeBytes > maxBytesPerCall)
+      if (groupN >= PutRecordsMaxEntries || groupBytes + b.sizeBytes > PutRecordsMaxBytes)
         flush()
       group += b; groupN += 1; groupBytes += b.sizeBytes
       count += b.numUserRecords

@@ -40,17 +40,17 @@ object ShardModel {
     loop(None, Seq.empty)
   }
 
-  /** Open-shard hash-range midpoints as decimal strings (reference:
-    * `KinesisWriter.scala:46-57`): start + (end - start) / 2 over the
-    * uint128 keyspace. */
+  /** Midpoint of the hash range [lo, hi] (reference:
+    * `KinesisWriter.scala:46-57`): lo + (hi - lo) / 2 over the uint128
+    * keyspace — the routing key for a shard and its split point. */
+  def midpoint(lo: BigInteger, hi: BigInteger): BigInteger =
+    lo.add(hi.subtract(lo).divide(BigInteger.TWO))
+
+  /** Open-shard hash-range midpoints as decimal strings. */
   def explicitHashKeys(streamName: String, lister: ShardLister): Array[String] =
     allShards(streamName, lister)
       .filter(_.endingSequenceNumber.isEmpty)
-      .map { s =>
-        val start = new BigInteger(s.startingHashKey)
-        val end = new BigInteger(s.endingHashKey)
-        start.add(end.subtract(start).divide(BigInteger.TWO)).toString
-      }
+      .map(s => midpoint(new BigInteger(s.startingHashKey), new BigInteger(s.endingHashKey)).toString)
       .toArray
 
   /** Uniform n-way split of the uint128 keyspace (what Kinesis does for a

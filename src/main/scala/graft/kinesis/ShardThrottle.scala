@@ -41,8 +41,7 @@ final class ShardThrottle(
     * than one second's budget draw the bucket negative rather than
     * deadlocking (the deficit delays subsequent sends). */
   def acquire(shardKey: String, bytes: Long, records: Long = 1L): Long = {
-    val b = bucket(id, shardKey, bytesPerSec, recordsPerSec, nanoTime(),
-      idleEvictMillis * 1000000L)
+    val b = bucketOf(shardKey)
     var waited = 0L
     var done = false
     while (!done) {
@@ -105,17 +104,18 @@ final class ShardThrottle(
     * producers, so back off below it and let [[refill]]'s additive
     * recovery find the true sustainable rate. */
   def onThrottled(shardKey: String): Unit = {
-    val b = bucket(id, shardKey, bytesPerSec, recordsPerSec, nanoTime(),
-      idleEvictMillis * 1000000L)
+    val b = bucketOf(shardKey)
     b.synchronized { b.factor = math.max(0.125, b.factor * 0.5) }
   }
 
   /** Effective budget factor for a shard (1.0 = full provisioned rate). */
   def factorOf(shardKey: String): Double = {
-    val b = bucket(id, shardKey, bytesPerSec, recordsPerSec, nanoTime(),
-      idleEvictMillis * 1000000L)
+    val b = bucketOf(shardKey)
     b.synchronized(b.factor)
   }
+
+  private def bucketOf(shardKey: String): Bucket =
+    bucket(id, shardKey, bytesPerSec, recordsPerSec, nanoTime(), idleEvictMillis * 1000000L)
 
   private def refill(b: Bucket): Unit = {
     val now = nanoTime()

@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import graft.kinesis.AggRecordCodec
+import graft.kinesis.{AggRecordCodec, KinesisSinkSemantics}
 
 /** DataSource V2 reader for KPL aggregated-record wire files — the
   * format the Kinesis sink emits (and a Kinesis consumer would archive):
@@ -60,20 +60,20 @@ object KplFileFormat {
     StructField("source_file", StringType, nullable = false)))
 
   /** Write each packed batch of `payloads` as one wire file under `dir`
-    * (the archive layout the reader consumes). Runs per-partition on
-    * executors; returns total user records written. */
+    * (the archive layout the reader consumes), packed as the sink packs
+    * with its default config. Runs per-partition on executors; returns
+    * total user records written. */
   def writeWireFiles(payloads: org.apache.spark.sql.DataFrame,
       payloadCol: String, dir: String, ehks: Array[String]): Long = {
     val conf = new SerializableHadoopConf(
       payloads.sparkSession.sessionState.newHadoopConf())
+    val cfg = KinesisSinkSemantics.Config(streamName = dir)
     val counts = payloads.select(org.apache.spark.sql.functions.col(payloadCol))
       .rdd.mapPartitionsWithIndex { (pid, rows) =>
         val base = new org.apache.hadoop.fs.Path(dir)
         val fs = base.getFileSystem(conf.value)
-        val router = new graft.kinesis.ShardModel.Router(ehks, 42L + pid)
-        val batches = new graft.kinesis.BatchingIterator(
-          rows.map(r => ("a", Option.empty[String], r.getAs[Array[Byte]](0))),
-          () => router.next())
+        val (_, batches) = KinesisSinkSemantics.packPartition(
+          rows.map(_.getAs[Array[Byte]](0)), ehks, cfg, pid)
         var n = 0L
         batches.zipWithIndex.foreach { case (b, i) =>
           val out = fs.create(new org.apache.hadoop.fs.Path(base, f"part-$pid%05d-$i%05d.kpl"), true)

@@ -40,21 +40,18 @@ object KinesisQueries {
     // surviving a wire encode→decode byte-level round trip.
     QDef("q_kinesis_pack_stats",
       (s, d) => {
-        val ehks = ShardModel.evenRanges(4).map { case (lo, hi) =>
-          lo.add(hi.subtract(lo).divide(java.math.BigInteger.TWO)).toString
-        }.toArray
+        val ehks = ShardModel.evenRanges(4)
+          .map { case (lo, hi) => ShardModel.midpoint(lo, hi).toString }.toArray
         val packed = lineitem(s, d)
           .select(col("l_orderkey"), col("l_linenumber"),
             concat_ws("|", col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
               col("l_linenumber"), col("l_quantity"), col("l_extendedprice")).as("payload"))
           .repartition(8, pmod(col("l_orderkey"), lit(8)))
           .sortWithinPartitions(col("l_orderkey"), col("l_linenumber"))
+        val cfg = KinesisSinkSemantics.Config(streamName = "q_kinesis_pack_stats")
         val rdd = packed.select(col("payload")).rdd.mapPartitionsWithIndex { (pid, rows) =>
-          val router = new ShardModel.Router(ehks, seed = 42L + pid) // Router mixes the seed
-
-          val it = new BatchingIterator(
-            rows.map(r => ("a", Option.empty[String], r.getString(0).getBytes("UTF-8"))),
-            () => router.next())
+          val (_, it) = KinesisSinkSemantics.packPartition(
+            rows.map(_.getString(0).getBytes("UTF-8")), ehks, cfg, pid)
           it.zipWithIndex.map { case (b, i) =>
             val wire = b.aggregate.toRecordBytes
             val decoded = AggRecordCodec.decode(wire)
@@ -93,9 +90,8 @@ object KinesisQueries {
     QDef("q_kpl_archive_roundtrip",
       (s, d) => {
         val dir = java.nio.file.Files.createTempDirectory("kpl_q").toString
-        val ehks = ShardModel.evenRanges(4).map { case (lo, hi) =>
-          lo.add(hi.subtract(lo).divide(java.math.BigInteger.TWO)).toString
-        }.toArray
+        val ehks = ShardModel.evenRanges(4)
+          .map { case (lo, hi) => ShardModel.midpoint(lo, hi).toString }.toArray
         val payloads = orders(s, d)
           .select(concat_ws("|", col("o_orderkey"), col("o_custkey"),
             col("o_totalprice")).cast("binary").as("payload"))

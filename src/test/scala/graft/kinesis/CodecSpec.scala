@@ -137,30 +137,25 @@ class CodecSpec extends AnyFunSuite {
     val digest = md5(bodyBytes); out.write(digest, 0, 16)
     val e = intercept[IllegalArgumentException](decode(out.toByteArray))
     assert(e.getMessage.contains("no data field"))
-    // ...but the explicit migration flag reads the same archive, and data
-    // at the CORRECT field 3 always wins over a legacy field-4 payload
-    val agg = decode(out.toByteArray, legacyData4 = true)
-    assert(agg.records.map(r => new String(r.data, StandardCharsets.UTF_8)) ==
-      IndexedSeq("hi"))
   }
 
-  test("legacyData4 never shadows a real field-3 data payload") {
+  test("decode rejects a field whose length overruns its message") {
+    // a data length pointing past the record (into the MD5 trailer) must
+    // fail, not read neighbouring bytes or truncate silently
     import java.io.ByteArrayOutputStream
     val body = new ByteArrayOutputStream()
     def w(xs: Int*): Unit = xs.foreach(body.write)
     w(0x0A, 0x01, 0x61)                   // pk "a"
     w(0x12, 0x01, 0x37)                   // ehk "7"
-    w(0x1A, 0x0C,
+    w(0x1A, 0x08,
       0x08, 0x00, 0x10, 0x00,
-      0x1A, 0x02, 0x68, 0x69,             // data = "hi" (field 3)
-      0x22, 0x02, 0x6E, 0x6F)             // tags bytes — must stay skipped
+      0x1A, 0x09, 0x68, 0x69)             // data claims 9 bytes, record has 2
     val bodyBytes = body.toByteArray
     val out = new ByteArrayOutputStream()
     out.write(Magic, 0, 4); out.write(bodyBytes, 0, bodyBytes.length)
     val digest = md5(bodyBytes); out.write(digest, 0, 16)
-    val agg = decode(out.toByteArray, legacyData4 = true)
-    assert(agg.records.map(r => new String(r.data, StandardCharsets.UTF_8)) ==
-      IndexedSeq("hi"))
+    val e = intercept[IllegalArgumentException](decode(out.toByteArray))
+    assert(e.getMessage.contains("overruns"))
   }
 
   test("dictionary encoding: repeated keys stored once, insertion order") {

@@ -16,9 +16,8 @@ class KplFormatSpec extends AnyFunSuite {
     val payloads = (0 until 3000).map(i => s"record-$i-${"y" * 50}").toDF("s")
       .select(col("s").cast("binary").as("payload"))
       .repartition(4)
-    val ehks = ShardModel.evenRanges(4).map { case (lo, hi) =>
-      lo.add(hi.subtract(lo).divide(java.math.BigInteger.TWO)).toString
-    }.toArray
+    val ehks = ShardModel.evenRanges(4)
+      .map { case (lo, hi) => ShardModel.midpoint(lo, hi).toString }.toArray
     val written = KplFileFormat.writeWireFiles(payloads, "payload", dir, ehks)
     assert(written == 3000)
 

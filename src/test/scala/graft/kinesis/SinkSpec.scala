@@ -1,12 +1,15 @@
 package graft.kinesis
 
+import java.nio.ByteBuffer
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalacheck.Gen
+import graft.Check
 import scala.jdk.CollectionConverters._
 import scala.math.Ordering.Implicits.seqOrdering
 
 /** At-least-once sink semantics against the in-memory transport:
-  * delivery, rebuild-retry with re-routing, bounded back-off, shard
-  * spread, and the distributed DataFrame path.
+  * delivery, rebuild-retry with re-routing, bounded back-off, random
+  * fault schedules, shard spread, and the distributed DataFrame path.
   */
 class SinkSpec extends AnyFunSuite {
 
@@ -45,23 +48,28 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("multi-entry grouping respects the per-call entry and byte caps") {
-    val calls = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val k = new InMemoryKinesis(numShards = 2)
-    val spy = new PutRecordsTransport {
-      override def putRecords(s: String, entries: Seq[PutEntry]): PutResult = {
-        calls.synchronized { calls += entries.size }
-        assert(entries.map(_.data.length.toLong).sum <= 5L * 1024 * 1024)
-        k.putRecords(s, entries)
+    def callSizes(in: Seq[Array[Byte]], c: KinesisSinkSemantics.Config): Seq[Int] = {
+      val calls = scala.collection.mutable.ArrayBuffer.empty[Int]
+      val k = new InMemoryKinesis(numShards = 2)
+      val spy = new PutRecordsTransport {
+        override def putRecords(s: String, entries: Seq[PutEntry]): PutResult = {
+          calls.synchronized { calls += entries.size }
+          assert(entries.map(_.data.length.toLong).sum <= KinesisSinkSemantics.PutRecordsMaxBytes)
+          k.putRecords(s, entries)
+        }
       }
+      val n = KinesisSinkSemantics.writePartition(in.iterator, spy,
+        ShardModel.explicitHashKeys("t", k), c)
+      assert(n == in.size)
+      assert(receivedPayloads(k).sorted == in.map(_.toSeq).sorted)
+      calls.toSeq
     }
-    val ehks = ShardModel.explicitHashKeys("t", k)
-    val in = payloads(120)
-    val n = KinesisSinkSemantics.writePartition(in.iterator, spy, ehks, cfg,
-      maxEntriesPerCall = 3)
-    assert(n == 120)
-    assert(calls.forall(_ <= 3), s"entry cap violated: $calls")
-    assert(calls.exists(_ > 1), s"grouping never batched: $calls")
-    assert(receivedPayloads(k).sorted == in.map(_.toSeq).sorted)
+    // maxAggSize = 1 admits each second record as the last: 1,200 payloads
+    // pack into 600 two-record aggregates, sent as 500 + 100
+    assert(callSizes(payloads(1200), cfg.copy(maxAggSize = 1)) == Seq(500, 100))
+    // one 600 kB payload per aggregate: eight fit under 5 MiB, nine do not
+    val big = (0 until 20).map(i => Array.fill[Byte](600000)(i.toByte))
+    assert(callSizes(big, KinesisSinkSemantics.Config("t", backoffMillis = 1)) == Seq(8, 8, 4))
   }
 
   test("shard listing paginates and midpoints land inside each range") {
@@ -104,10 +112,13 @@ class SinkSpec extends AnyFunSuite {
       override def putRecords(s: String, e: Seq[PutEntry]): PutResult = {
         calls += 1
         if (calls == 1) PutResult(e.size, Seq.empty) // fail the original send
-        else { delivered += AggRecordCodec.decode(e.head.data).numUserRecords; PutResult(0, Seq("x")) }
+        else {
+          delivered ++= e.map(x => AggRecordCodec.decode(x.data).numUserRecords)
+          PutResult(0, e.map(_ => "x"))
+        }
       }
     }
-    KinesisSinkSemantics.sendWithRetry(batch, flakyOnce,
+    KinesisSinkSemantics.sendGroupWithRetry(Seq(batch), flakyOnce,
       new ShardModel.Router(bigEhks, 1L),
       KinesisSinkSemantics.Config("t", backoffMillis = 1))
     assert(delivered.sum == agg.numUserRecords, s"lost records: $delivered")
@@ -173,16 +184,48 @@ class SinkSpec extends AnyFunSuite {
     assert(b.add("a", Some("1"), Array[Byte](1, 2)))
     val batch = PackedBatch(b.clearAndGet().get, IndexedSeq(Array[Byte](1, 2)))
     val ex = intercept[IllegalStateException] {
-      KinesisSinkSemantics.sendWithRetry(batch, alwaysFail, router,
+      KinesisSinkSemantics.sendGroupWithRetry(Seq(batch), alwaysFail, router,
         cfg.copy(maxRetries = 3))
     }
     assert(ex.getMessage.contains("after 3 retries"))
   }
 
+  test("back-off delay stays within [0, 30 s] and never decreases") {
+    Seq(0L, 1L, 100L, 30000L, Long.MaxValue).foreach { base =>
+      val delays = (0 to 200).map(a =>
+        KinesisSinkSemantics.backoffDelay(cfg.copy(backoffMillis = base), a))
+      assert(delays.forall(d => d >= 0 && d <= 30000), s"base $base: $delays")
+      assert(delays.zip(delays.tail).forall { case (a, b) => a <= b }, s"base $base: $delays")
+    }
+  }
+
+  test("random fault schedules: every payload arrives, every aggregate decodes within 1 MiB") {
+    val every = Gen.oneOf(0 +: (2 to 9))
+    // mostly small payloads plus a tail above the 100 kB last-record
+    // limit, so the gate's flush-first and hard-cap branches are reached
+    val size = Gen.frequency(9 -> Gen.chooseNum(1, 2000), 1 -> Gen.chooseNum(100001, 400000))
+    val gen = for {
+      failEvery <- every; throttleEvery <- every; failRecordEvery <- every
+      sizes <- Gen.chooseNum(1, 40).flatMap(Gen.listOfN(_, size))
+    } yield (failEvery, throttleEvery, failRecordEvery, sizes)
+    Check.okNoShrink(gen, minTests = 200) { case (fe, te, fre, sizes) =>
+      val k = new InMemoryKinesis(numShards = 8, failEvery = fe, throttleEvery = te,
+        failRecordEvery = fre)
+      val in = sizes.zipWithIndex.map { case (n, i) => Array.tabulate[Byte](n)(j => (i * 31 + j).toByte) }
+      val n = KinesisSinkSemantics.writePartition(in.iterator, k,
+        ShardModel.explicitHashKeys("t", k),
+        KinesisSinkSemantics.Config("t", maxRetries = 1000, backoffMillis = 0))
+      val stored = k.received.values.asScala.toSeq.flatMap(_.asScala)
+      val got = stored.flatMap(w => AggRecordCodec.decode(w).records.map(r => ByteBuffer.wrap(r.data))).toSet
+      k.received.clear() // the stream registry outlives the case
+      n == in.size && stored.forall(_.length <= AggRecordCodec.MaxBytesPerRecord) &&
+        in.forall(p => got(ByteBuffer.wrap(p)))
+    }
+  }
+
   test("router spreads batches across shards") {
-    val ehks = ShardModel.evenRanges(8).map { case (lo, hi) =>
-      lo.add(hi.subtract(lo).divide(java.math.BigInteger.TWO)).toString
-    }.toArray
+    val ehks = ShardModel.evenRanges(8)
+      .map { case (lo, hi) => ShardModel.midpoint(lo, hi).toString }.toArray
     val distinctFirstDraws = (0 until 16)
       .map(pid => new ShardModel.Router(ehks, 42L + pid).next()).distinct
     assert(distinctFirstDraws.size >= 4,
