@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Floor-measurement probe for q_lsh_band_sweep(_sampled) — the
@@ -15,15 +14,9 @@ object BandSweepProbe {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.defaultCpus, dirs.head)
     for (d <- dirs; sampled <- Seq(false, true)) {
+      GraftSession.reseed(spark, d)
       val docs0 = graft.tables.Tables.documents(spark, d)
       val docs = if (sampled) docs0.filter(
         conv(substring(md5(col("doc_id").cast("string").cast("binary")),

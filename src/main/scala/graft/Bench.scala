@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main (driver contract): runs every declared query
   * on $SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
   *
@@ -12,47 +10,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val defaultCpus = math.min(32, Runtime.getRuntime.availableProcessors).toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Measured at sf0.1: AQE ON beats OFF (~87 s vs ~97 s total) — its
-      // post-shuffle coalescing trims task overhead on the 32-partition
-      // stages. SPARK_GRAFT_AQE=false to compare.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // r17 (VERDICT r16 item 5): the AQE seed partition count is now
-      // DERIVED FROM INPUT SIZE by default (Tables.derivedInitPartitions:
-      // parquet bytes / 8 MB, clamped to [cpus, 2048]) instead of a
-      // constant. At the test SFs (≤ 17.5 MB) the clamp returns `cpus` —
-      // byte-identical methodology to every prior round (a FIXED 512 was
-      // measured −13% on the sf0.1 hot set: 512-block map outputs cost
-      // more than they buy on MB-scale shuffles) — while the sf100
-      // anchor derives ~600+, reproducing the committed 1483.7→867.4 s
-      // outlier A/B without an env var. SPARK_GRAFT_INIT_PARTITIONS
-      // still overrides for measurement.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS",
-          graft.tables.Tables.derivedInitPartitions(sfDir, cpus.toInt)
-            .toString))
-      // static conf: janino's class cache defaults to 100 entries, ~60×
-      // below this suite's generated-class count. r16 re-measure
-      // (PlanFloor, 411-query surface): one full pass generates ~6,160
-      // DISTINCT classes — at 100 entries 12,808 compilations ≈ 92 s,
-      // at the old 5000 the suite no longer fits either, so each bench
-      // pass cyclically re-evicts and recompiles the ~1,200 overflow
-      // (pass 2/3 medians pay it). 24000 holds the whole working set:
-      // passes after the first compile zero classes. Any long-lived
-      // session serving a query mix wants this; memory cost is bounded
-      // by class bytecode (~KBs each, tens of MB total).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "24000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(GraftSession.defaultCpus)
+    val spark = GraftSession.build(cpus, sfDir)
     // r17 (VERDICT r16 item 7): the table cache default is now COLD —
     // every query computes from the parquet inputs, matching the sf100
     // anchor methodology (where the cache MEASURED slower: 127.4 s
@@ -181,15 +141,18 @@ object Bench {
     // by tools/bench_duckdb.py (committed artifact, regenerated per
     // round) — embedded verbatim so bench_vs_baseline has a denominator
     // that is not the engine's previous round. Absent file ⇒ field
-    // omitted, artifact shape otherwise unchanged.
+    // omitted, artifact shape otherwise unchanged. A pretty-printed file
+    // is joined onto one line (JSON strings hold no raw newlines), so
+    // the full record stays one stdout line.
     // (r15 adds the sf1 anchors: the same DuckDB battery at 10× the
     // rows, plus Spark's own committed battery medians at sf1 — the
     // pair that MEASURES the floor-amortization claim instead of
-    // arguing it from FloorProbe.)
+    // arguing it.)
     def embed(file: String, field: String): String = {
       val p = java.nio.file.Paths.get(s"/root/repo/tools/$file")
       if (java.nio.file.Files.isReadable(p)) {
         val raw = java.nio.file.Files.readString(p).trim
+          .linesIterator.map(_.trim).mkString(" ")
         if (raw.startsWith("{") && raw.endsWith("}"))
           s""","$field":$raw""" else ""
       } else ""
@@ -210,7 +173,7 @@ object Bench {
         // claim into a number inside the artifact itself
         embed("bench_ab.json", "bench_ab")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","stat":"median_of_$reps","total_min":$minTotal,"queries":${jmap(med)},"queries_min":${jmap(mins)},"errors":$errs,"load_avg":$loadAvg,"passes":$passesJson$duckAnchor,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","stat":"median_of_$reps","total_min":$minTotal,"queries":${jmap(med)},"queries_min":${jmap(mins)},"errors":$errs,"load_avg":$loadAvg,"passes":$passesJson$duckAnchor,"cpus":$cpus,"sf":"$sfDir"}"""
     // Stdout alone is fragile (the driver tails it and a ~6 KB line can be
     // truncated away) — persist the same JSON to a file as insurance.
     // r17: the file is named by (cpus, sf) and the record carries "cpus"
@@ -221,8 +184,7 @@ object Bench {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       s"/root/repo/bench_out_c${cpus}_$sfTag.json")
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath),
-      json.dropRight(1) + s""","cpus":$cpus}""")
+      java.nio.file.Paths.get(outPath), json)
     catch { case e: Throwable => System.err.println(s"[bench] file write failed: $e") }
     // The driver's artifact keeps only the LAST ~2000 chars of stdout, so
     // the full JSON line above loses its head (r15's BENCH artifact was
@@ -237,11 +199,16 @@ object Bench {
     // of the distribution, not the full surface (full map: first line +
     // the per-(cpus, sf) file above).
     val topN = 40
-    val topQ = med.sortBy(-_._2).take(topN).map { case (k, v) =>
-      k -> new java.math.BigDecimal(v)
-        .round(new java.math.MathContext(3)).doubleValue }
+    val topQ = med.sortBy(-_._2).take(topN).map { case (k, v) => k -> sig3(v) }
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","stat":"median_of_$reps","total_min":$minTotal,"n_queries":${names.size},"queries":${jmap(topQ)},"queries_truncated_to_top":$topN,"errors":$errs,"load_avg":$loadAvg,"cpus":$cpus,"sf":"$sfDir","full_record":"$outPath"}""")
     spark.stop()
   }
+
+  /** `v` to 3 significant figures; a non-finite median (which
+    * `BigDecimal` cannot hold) passes through unchanged. */
+  def sig3(v: Double): Double =
+    if (java.lang.Double.isFinite(v))
+      new java.math.BigDecimal(v).round(new java.math.MathContext(3)).doubleValue
+    else v
 }

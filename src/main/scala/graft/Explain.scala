@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of the named queries
   * (or a default load-bearing set) — used to keep pushdown, pruning,
   * broadcast choice, and whole-stage codegen spans honest while iterating.
@@ -72,14 +70,7 @@ object Explain {
       // dedup a cluster-key self-join below the per-cluster window
       "q_fdr_bh", "q_unigram_lm", "q_knn_graph_clusters",
       "q_semantic_dedup")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build(4, sfDir)
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.chaining._
 
@@ -257,22 +256,16 @@ object PlanDump {
     // optional third arg: also write post-AQE executed-plan
     // fingerprints for the PlanPins.exec subset to this file
     val execOut = args.lift(2)
-    // default matches TestSpark's local[4]/4-shuffle-partition config:
+    // default 4 cpus makes this TestSpark's session (both are
+    // GraftSession.build(4, sf0.001)):
     // the EXECUTED (post-AQE) fingerprints are structurally sensitive to
     // the initial shuffle partition count (AQE coalescing can insert or
     // drop an AQEShuffleRead+Sort pair — measured: q_cosine_ivf 147 ops
     // at 8 threads vs 149 at 4), and the artifact's only consumer is the
     // 4-thread PlanPinSpec gate session. Pre-exec fingerprints are
     // partition-count-blind either way.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.build(cpus, sfDir)
     val mode = org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     val dbg = sys.env.get("PLANDUMP_DEBUG_DIR")
     dbg.foreach(p => new java.io.File(p).mkdirs())

@@ -3,51 +3,66 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Battery-table scale replicator (r15 VERDICT directive 2 — the sf100
-  * anchor point): synthesize `/tmp/graft_sf_x<copies>` holding ONLY the
-  * tables the 21-query TPC-H battery reads (lineitem + orders key-shifted,
-  * dimensions copied as-is), so a 1000× (~600 M lineitem rows, ~15 GB
-  * parquet) corpus fits this box's scratch where ScaleProof's all-table
-  * replication (documents/events/embeddings included) would not need to.
+/** The scale replicator (r15 VERDICT directive 2 — the sf100 anchor
+  * point) and its battery main.
   *
-  * Row semantics are IDENTICAL to ScaleProof.replicate — the same fixed
-  * key shift per copy, facts shifted on their join keys, o_custkey and
-  * the dims deliberately unshifted so fact↔dim joins stay aligned — but
-  * the replication is one crossJoin against `spark.range(copies)` instead
-  * of a `copies`-way union: the same multiset of rows from a plan whose
-  * size is O(1) in `copies`, which matters at 1000 (a 1000-branch union
-  * is quadratic in the analyzer). Output is Spark-written parquet
-  * DIRECTORIES; both `graft.Bench` (via Tables) and
-  * `tools/bench_duckdb.py` (glob view) read that layout.
+  * [[replicate]] synthesizes an sfN-equivalent corpus from a small base:
+  * each fact table is written `copies` times with its key columns shifted
+  * by `copy * Shift`, so joins on those keys stay aligned inside a copy
+  * and never cross copies; o_custkey and the dimension tables are left
+  * unshifted (dimensions copied once) so fact↔dim joins stay aligned.
+  * The fan-out is one crossJoin against `spark.range(copies)` rather than
+  * a `copies`-way union: the same multiset of rows from a plan whose size
+  * is O(1) in `copies`, which matters at 1000 (a 1000-branch union is
+  * quadratic in the analyzer). Output is Spark-written parquet
+  * DIRECTORIES `<dir>/<table>.parquet`, which both `Tables` and
+  * `tools/bench_duckdb.py` (glob view) read.
+  *
+  * `main` writes `/tmp/graft_sf_x<copies>` holding ONLY the tables the
+  * 21-query TPC-H battery reads, so a 1000× (~600 M lineitem rows,
+  * ~15 GB parquet) corpus fits the scratch disk; `ScaleProof` replicates
+  * its wider table set through the same function.
   *
   * Usage: runMain graft.ScaleData [copies] — default 1000.
   */
 object ScaleData {
   def main(args: Array[String]): Unit = {
     val copies = args.headOption.map(_.toInt).getOrElse(1000)
-    val spark = SparkSession.builder()
-      .master(s"local[${math.min(32, Runtime.getRuntime.availableProcessors)}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val base = "/root/testdata/sf0.1"
     val dir = s"/tmp/graft_sf_x$copies"
-    val Shift = 10000000L // > max sf0.1 key; same constant as ScaleProof
+    val spark = GraftSession.build(GraftSession.defaultCpus, base)
     val t0 = System.nanoTime()
-    def replicate(name: String, keyCols: Seq[String]): Unit = {
-      // repartition the SMALL base (600 k rows) so the ×copies fan-out
-      // runs on 128 parallel tasks — the single sf0.1 parquet file is
-      // one split, and fanning 600 M rows from one task would serialize
-      // the build; the big side is never shuffled
-      val df = graft.tables.Tables.table(spark, base, name).repartition(128)
-      val copyIdx = spark.range(copies).withColumnRenamed("id", "__copy")
-      val out = keyCols.foldLeft(df.crossJoin(copyIdx)) { (d, k) =>
+    replicate(spark, base, dir, copies, BatteryFacts, Dimensions)
+    println(s"[scaledata] lineitem rows: " +
+      spark.read.parquet(s"$dir/lineitem.parquet").count())
+    println(f"[scaledata] done in ${(System.nanoTime() - t0) / 1e9}%.1f s -> $dir")
+    spark.stop()
+  }
+
+  /** Per-copy key offset: larger than any sf0.1 key. */
+  val Shift = 10000000L
+
+  val BatteryFacts = Seq("lineitem" -> Seq("l_orderkey"), "orders" -> Seq("o_orderkey"))
+  val Dimensions = Seq("customer", "supplier", "nation", "region", "part")
+
+  /** Write `copies` key-shifted copies of each `facts` table (name → key
+    * columns) and one plain copy of each `dims` table from `base` into
+    * `dir`. */
+  def replicate(spark: SparkSession, base: String, dir: String, copies: Int,
+      facts: Seq[(String, Seq[String])], dims: Seq[String]): Unit = {
+    val t0 = System.nanoTime()
+    val copyIdx = spark.range(copies).withColumnRenamed("id", "__copy")
+    facts.foreach { case (name, keyCols) =>
+      // repartition the SMALL base so the ×copies fan-out runs in
+      // parallel — a single sf0.1 parquet file is one split, and fanning
+      // 600 M rows from one task would serialize the build; the big side
+      // is never shuffled
+      val df = graft.tables.Tables.table(spark, base, name)
+        .repartition(math.min(128, copies))
+      keyCols.foldLeft(df.crossJoin(copyIdx)) { (d, k) =>
         d.withColumn(k, col(k) + col("__copy") * lit(Shift))
       }.drop("__copy")
-      out.write.mode("overwrite")
+        .write.mode("overwrite")
         // ~5 M rows ≈ 90 MB compressed per file: parallel row groups
         // for DuckDB's glob reader without a 600 M-row shuffle
         .option("maxRecordsPerFile", 5000000)
@@ -55,15 +70,9 @@ object ScaleData {
       println(f"[scaledata] $name x$copies written in " +
         f"${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
-    replicate("lineitem", Seq("l_orderkey"))
-    replicate("orders", Seq("o_orderkey"))
-    Seq("customer", "supplier", "nation", "region", "part").foreach { n =>
-      spark.read.parquet(s"$base/$n.parquet").write.mode("overwrite")
-        .parquet(s"$dir/$n.parquet")
+    dims.foreach { name =>
+      spark.read.parquet(s"$base/$name.parquet").write.mode("overwrite")
+        .parquet(s"$dir/$name.parquet")
     }
-    println(s"[scaledata] lineitem rows: " +
-      spark.read.parquet(s"$dir/lineitem.parquet").count())
-    println(f"[scaledata] done in ${(System.nanoTime() - t0) / 1e9}%.1f s -> $dir")
-    spark.stop()
   }
 }

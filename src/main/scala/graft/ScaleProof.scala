@@ -2,8 +2,6 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Scale smoke (NEXT.md #7): synthesize an sfN-equivalent lineitem/orders
   * in /tmp by replicating sf0.1 with shifted keys (arg = copies: 10 → sf1
@@ -40,51 +38,26 @@ object ScaleProof {
     // optional second arg: regex over query names — lets a 100x run
     // target specific operators without paying the full battery
     val filter = args.lift(1).map(_.r)
-    val spark = SparkSession.builder()
-      .master(s"local[${math.min(32, Runtime.getRuntime.availableProcessors)}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.tables.Tables
-
     val base = "/root/testdata/sf0.1"
     val dir = s"/tmp/graft_sf_x$copies"
+    val spark = GraftSession.build(GraftSession.defaultCpus, base)
     val t0 = System.nanoTime()
-    // replicate with a fixed key shift (same for both tables, so
-    // l_orderkey ↔ o_orderkey joins stay aligned across copies)
-    val Shift = 10000000L
-    def replicate(name: String, keyCols: Seq[String]): Unit = {
-      val df = Tables.table(spark, base, name)
-      val out = (0 until copies).map { i =>
-        keyCols.foldLeft(df) { (d, k) =>
-          d.withColumn(k, col(k) + lit(i * Shift)) }
-      }.reduce(_ union _)
-      out.write.mode("overwrite").parquet(s"$dir/$name.parquet")
-    }
-    replicate("lineitem", Seq("l_orderkey"))
-    replicate("orders", Seq("o_orderkey"))
-    // documents replicate to EXACT duplicates under fresh ids — every doc
-    // becomes a `copies`-sized dup group, the adversarial input for the
-    // clustering operator (all nodes carry edges; no singleton shortcut)
-    replicate("documents", Seq("doc_id"))
-    // events replicate under fresh user/event ids: user count scales by
-    // `copies` while per-user history stays fixed — the funnel/retention
-    // shapes must stay two hash-aggs + one user_id equi-join, with state
-    // bounded by |users| per partition, not corpus size
-    replicate("events", Seq("event_id", "user_id"))
-    // embeddings replicate under fresh vec_id: 10x vectors through the
-    // map-only quantizer
-    replicate("embeddings", Seq("vec_id"))
-    // dimensions copy as-is: the dimension side of every new join stays
-    // broadcast-sized while the fact side scales (orders' o_custkey is
-    // deliberately NOT shifted, so fact↔dim joins stay aligned)
-    Seq("customer", "supplier", "nation", "region", "part").foreach { name =>
-      spark.read.parquet(s"$base/$name.parquet").write.mode("overwrite")
-        .parquet(s"$dir/$name.parquet")
-    }
+    ScaleData.replicate(spark, base, dir, copies, ScaleData.BatteryFacts ++ Seq(
+      // documents replicate to EXACT duplicates under fresh ids — every
+      // doc becomes a `copies`-sized dup group, the adversarial input for
+      // the clustering operator (all nodes carry edges; no singleton
+      // shortcut)
+      "documents" -> Seq("doc_id"),
+      // events replicate under fresh user/event ids: user count scales by
+      // `copies` while per-user history stays fixed — the funnel/retention
+      // shapes must stay two hash-aggs + one user_id equi-join, with state
+      // bounded by |users| per partition, not corpus size
+      "events" -> Seq("event_id", "user_id"),
+      // embeddings replicate under fresh vec_id: 10x vectors through the
+      // map-only quantizer
+      "embeddings" -> Seq("vec_id")), ScaleData.Dimensions)
+    // the AQE seed follows the replicated corpus, not the base
+    GraftSession.reseed(spark, dir)
     println(f"[scale] synthesized ${copies}x data in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     println(s"[scale] lineitem rows: ${spark.read.parquet(s"$dir/lineitem.parquet").count()}")
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -18,26 +17,8 @@ object Verify {
         "for correctness runs (the oracle derives k from the corpus)")
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args.drop(2).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // data-size-derived AQE seed (see graft.Bench / Tables.
-      // derivedInitPartitions): identity at the gate SFs (≤ 17.5 MB ⇒
-      // clamp to cpus), scale-adaptive on bigger corpora
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS",
-          graft.tables.Tables.derivedInitPartitions(sfDir, cpus.toInt)
-            .toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // timestamp annotations vary by testdata regen: TIMESTAMP(NANOS)
-      // reads as ns-Long under this flag, naive µs reads as
-      // TIMESTAMP_NTZ; Tables.normalizeEventTs dispatches on the read
-      // type and normalizes either to µs TimestampType
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.build(cpus, sfDir)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

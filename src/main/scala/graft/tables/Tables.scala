@@ -14,8 +14,9 @@ object Tables {
 
   /** Data-size-derived AQE seed partition count (guide §2: derive the
     * shuffle parallelism from INPUT SIZE, never a constant tuned for one
-    * box): one initial partition per 8 MB of on-disk parquet under
-    * `sfDir`, clamped to [cpus, 2048]. AQE's coalescer only merges DOWN,
+    * box): one initial partition per 8 MB of `*.parquet` files under
+    * `sfDir` (checksums, `_SUCCESS` markers and stray files do not
+    * count), clamped to [cpus, 2048]. AQE's coalescer only merges DOWN,
     * so the seed must start high enough for the data — at the sf100
     * anchor (~600 M rows) a cpus-sized seed left 1–2 GB per sort-merge
     * partition (q12 463 s vs 189 s at 512, the committed r16 A/B), while
@@ -31,7 +32,8 @@ object Tables {
         if (!java.nio.file.Files.isDirectory(root)) 0L
         else {
           val s = java.nio.file.Files.walk(root)
-          try s.filter(java.nio.file.Files.isRegularFile(_))
+          try s.filter(p => java.nio.file.Files.isRegularFile(p) &&
+              p.getFileName.toString.endsWith(".parquet"))
             .mapToLong(java.nio.file.Files.size(_)).sum
           finally s.close()
         }
@@ -66,7 +68,7 @@ object Tables {
     * parquet writer annotated:
     *  - TIMESTAMP(NANOS) → Spark 4 reads a nanosecond Long
     *    (`spark.sql.legacy.parquet.nanosAsLong=true`, set in
-    *    Verify/Bench/tests); integral `div 1000` keeps it exact (the
+    *    GraftSession); integral `div 1000` keeps it exact (the
     *    data's sub-µs digits are zero).
     *  - naive µs (isAdjustedToUTC=false) → Spark 4 reads TIMESTAMP_NTZ;
     *    the cast to TimestampType is the identity under the UTC-pinned

@@ -2,22 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (JVM-wide). */
+/** One shared local session for all suites (JVM-wide): the PlanDump
+  * session, 4 cpus over sf0.001. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
   val sf0001 = "/root/testdata/sf0.001"
   /** Larger SF for specs that must exercise data-dependent operating
     * points (auto-k etc.) past their small-corpus floors. */
   val sf01 = "/root/testdata/sf0.1"
+  lazy val spark: SparkSession = GraftSession.build(4, sf0001)
 }
