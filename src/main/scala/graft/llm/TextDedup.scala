@@ -141,39 +141,11 @@ object TextDedup {
     // the shingle table feeds three plan branches (sizes + both join
     // sides) — materialize it once instead of re-running the tokenize +
     // explode subtree three times (localCheckpoint: GC-reclaimed, no
-    // CacheManager substitution into unrelated plans)
-    val shRaw = shingleTable(docs, idCol, textCol, shingleK, blockCols,
-      maxShingleDf)
-    // COMPACT THE JOIN KEY (r14 VERDICT directive 4 — the measured 100×
-    // storage exclusion is this build's checkpoint + two-sided shuffle
-    // footprint, and both carry the ~25-byte gram string per row): an
-    // 8-byte xxhash64 sid roughly halves the checkpoint AND both join-
-    // side shuffles — the q_boilerplate_fingerprint width trade applied
-    // to the edge build. EXACT, not probabilistic: one bounded driver
-    // action (a 1-row agg, the skew-router verdict-fetch precedent)
-    // verifies xxhash64 is INJECTIVE on this corpus's actual distinct
-    // grams — per-doc gram distinctness and every cross-doc equality
-    // are then provably preserved, so `inter`, `sz`, and jaccard are
-    // bit-identical to the string-keyed build. A collision (birthday
-    // bound ~3e-8 at 1e5 distinct grams; never observed) falls back to
-    // the string key: same results, just wider rows.
-    // Checkpoint BEFORE the injectivity check (r15 ADVICE): the check's
-    // countDistinct shuffle and the checkpoint each materialized the
-    // tokenize+explode subtree, so it ran twice per edge build. Now the
-    // subtree runs exactly once — the checkpoint carries both keys
-    // (string + 8-byte hash, slightly wider than hash-only) and the
-    // check scans the checkpointed rows. The join-side shuffles still
-    // carry only the projected 8-byte key on the injective path, which
-    // is where the width trade pays (two shuffle sides vs one stored
-    // frame).
-    val hashed = shRaw.withColumn("sid", xxhash64(col("sh")))
-      .localCheckpoint(true)
-    val keyChk = hashed.agg(
-      countDistinct(col("sh")).as("nsh"),
-      countDistinct(col("sid")).as("nsid")).head()
-    val sh = if (keyChk.getLong(0) == keyChk.getLong(1))
-        hashed.drop("sh").withColumnRenamed("sid", "sh")
-      else hashed.drop("sid")
+    // CacheManager substitution into unrelated plans). Key compaction
+    // (r14 VERDICT directive 4) makes both join-side shuffles carry an
+    // 8-byte key instead of the ~25-byte gram.
+    val sh = KeyCompaction.compact(shingleTable(docs, idCol, textCol,
+      shingleK, blockCols, maxShingleDf), "sh")
     val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
     val blockCond = blockCols
       .map(b => col(s"a.$b") === col(s"b.$b"))

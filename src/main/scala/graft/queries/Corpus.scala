@@ -2381,23 +2381,10 @@ object Corpus {
           .agg(count(lit(1)).as("sup")).filter(col("sup") >= 2)
           .select(col("ia"), col("ib"))
           .localCheckpoint(true)
-        for (_ <- 1 to 4) {
-          // keep is NOT checkpointed (r16 opt): its two semi-join probes
-          // build from the same canonical degree-agg exchange, which
-          // Spark reuses at runtime — the eager per-round checkpoint was
-          // one extra action ×4 rounds for work that already ran once.
-          // The edges checkpoint stays: each round references the prior
-          // round 3× (degree union ×2 + restriction), so an unrolled
-          // lineage would grow 3^k.
-          val keep = edges.select(col("ia").as("u"))
-            .unionAll(edges.select(col("ib").as("u")))
-            .groupBy(col("u")).agg(count(lit(1)).as("deg"))
-            .filter(col("deg") >= 3).select(col("u"))
-          edges = edges
-            .join(keep.select(col("u").as("ia")), Seq("ia"), "left_semi")
-            .join(keep.select(col("u").as("ib")), Seq("ib"), "left_semi")
-            .localCheckpoint(true)
-        }
+        // the edges checkpoint stays: each round references the prior
+        // round 3× (degree union ×2 + restriction), so an unrolled
+        // lineage would grow 3^k
+        for (_ <- 1 to 4) edges = kcoreRound(edges).localCheckpoint(true)
         edges.select(col("ia").as("u"))
           .unionAll(edges.select(col("ib").as("u")))
           .groupBy(col("u")).agg(count(lit(1)).as("deg"))
@@ -3227,6 +3214,21 @@ object Corpus {
           CAST(greatest(1000000 - sum(term_e6), 0) AS BIGINT) AS h2_e6
         FROM p GROUP BY 1, 2 ORDER BY src_a, src_b"""))
   )
+
+  /** One q_graph_kcore peel round: keep the (ia, ib) edges whose ends
+    * both have degree ≥ 3. `keep` is NOT checkpointed (r16 opt): its two
+    * semi-join probes build from the same canonical degree-agg exchange,
+    * which Spark reuses at runtime; an eager checkpoint was one extra
+    * action per round for work that already ran once. */
+  private[graft] def kcoreRound(edges: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val keep = edges.select(col("ia").as("u"))
+      .unionAll(edges.select(col("ib").as("u")))
+      .groupBy(col("u")).agg(count(lit(1)).as("deg"))
+      .filter(col("deg") >= 3).select(col("u"))
+    edges.join(keep.select(col("u").as("ia")), Seq("ia"), "left_semi")
+      .join(keep.select(col("u").as("ib")), Seq("ib"), "left_semi")
+  }
 
   /** (user_id, event-day) projection shared by the HLL cumulative
     * family — day = datediff from the 2024-01-01 epoch, the same

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.llm.KeyCompaction
 import graft.tables.Tables._
 import Q._
 
@@ -3764,32 +3765,25 @@ object Curation {
              i -> array_join(slice(toks, i, 8), ' '))""")))
       .toDF("doc_id", "pos0", "g")
       .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("g"),
-        xxhash64(col("g")).as("gid"))
+        KeyCompaction.hash(col("g")).as("gid"))
       // materialized ONCE: the tokenize + gram explode used to run
       // twice (df-agg side + join probe side of `kept`); every
       // downstream pass now reads this frame
       .localCheckpoint(true)
-    // r17 opt (guide §2.3, shuffle fewer bytes — the jaccardPairs /
-    // setsim xxhash64 trade applied to the ~45-byte 8-gram strings):
-    // the df agg, the df-cap join probe, the checkpointed kept frame
-    // and BOTH candidate-join sides carry an 8-byte gid instead of the
-    // gram string. EXACT via the injectivity guard, which here rides
-    // the EXISTING df aggregation (countDistinct(g) per gid alongside
-    // gdf — no second corpus scan): max(ng) = 1 proves gid⇄g bijective
-    // over ALL grams, so the df-cap set and every cross-doc gram match
-    // are unchanged. The guard must cover pre-cap grams — a collision
-    // among dropped grams could merge two rare grams past the cap and
-    // silently LOSE result rows — hence per-gid stats, not kept-only.
-    // Collision (birthday ~1e-7 at ~1M distinct grams; never observed)
-    // falls back to the string key: same results, wider rows.
+    // r17 opt (guide §2.3, shuffle fewer bytes): the df agg, the df-cap
+    // join probe and BOTH candidate-join sides carry the compacted 8-byte
+    // gid instead of the ~45-byte 8-gram. The key-compaction guard rides
+    // the EXISTING df aggregation (no second corpus scan), and it must
+    // cover pre-cap grams: a collision among dropped grams could merge
+    // two rare grams past the cap and silently LOSE result rows — hence
+    // per-gid stats over all grams, not kept-only.
     val gstats = grams.groupBy(col("gid"))
       .agg(countDistinct(col("doc_id")).as("gdf"),
-        countDistinct(col("g")).as("ng"))
-      // LAZY checkpoint: the guard agg below materializes it, so guard +
+        KeyCompaction.keysPerHash(col("g")).as("ng"))
+      // LAZY checkpoint: the guard below materializes it, so guard +
       // checkpoint cost ONE job (≤ |distinct grams| rows; cap reads it)
       .localCheckpoint(false)
-    val injective =
-      gstats.agg(max(col("ng")).as("mx")).head().getLong(0) == 1L
+    val injective = KeyCompaction.injective(gstats, "ng")
     val key = if (injective) "gid" else "g"
     val hot =
       if (injective) gstats.filter(col("gdf") <= 64).select(col("gid"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.llm.KeyCompaction
 import graft.tables.Tables._
 import Q._
 
@@ -635,34 +636,17 @@ object Llm {
   private[graft] def setsimPrefixJoin(s: SparkSession, d: String,
       sampled: Boolean,
       sampleNibbles: Seq[String] = Seq("0")): DataFrame = {
-    // r17 opt (guide §2.3, shuffle fewer bytes — the r15 jaccardPairs
-    // trade): compact the ~18-byte shingle string to an 8-byte xxhash64
-    // key for EVERY downstream exchange (df agg, prefix window sort,
-    // candidate self-join, both verify-join sides). EXACT, not
-    // probabilistic: one bounded 1-row agg over the already-checkpointed
-    // frame verifies xxhash64 is injective on this corpus's distinct
-    // shingles — df counts, per-doc sizes and every cross-doc equality
-    // (hence `inter` and the jaccard) are then provably unchanged. The
-    // rare-first window order becomes (df, sid) instead of (df, sh) —
-    // a DIFFERENT but equally valid global total order (the prefix
-    // principle needs only SOME fixed total order; see the positional-
-    // filter proof below), so the candidate set may differ while the
-    // verified result is identical — the brute-force oracle is the
-    // proof. A collision (birthday ~3e-8 at 1e5 shingles; never
-    // observed) falls back to the string key: same results, wider rows.
-    // LAZY checkpoint: the injectivity agg below is the materializing
-    // action, so guard + checkpoint cost ONE job, not two (measured:
-    // the eager-ckpt + separate-guard variant pays a full extra action)
-    val shRaw = graft.llm.TextDedup
-      .shingleTable(documents(s, d), "doc_id", "text", 3)
-      .withColumn("sid", xxhash64(col("sh")))
-      .localCheckpoint(false)
-    val keyChk = shRaw.agg(
-      countDistinct(col("sh")).as("nsh"),
-      countDistinct(col("sid")).as("nsid")).head()
-    val sh = if (keyChk.getLong(0) == keyChk.getLong(1))
-        shRaw.select(col("doc_id"), col("sid").as("sh"))
-      else shRaw.select(col("doc_id"), col("sh"))
+    // r17 opt (guide §2.3, shuffle fewer bytes): every downstream
+    // exchange (df agg, prefix window sort, candidate self-join, both
+    // verify-join sides) carries the compacted 8-byte key instead of the
+    // ~18-byte shingle. The rare-first window order becomes (df, sid)
+    // instead of (df, sh) — a DIFFERENT but equally valid global total
+    // order (the prefix principle needs only SOME fixed total order; see
+    // the positional-filter proof below), so the candidate set may
+    // differ while the verified result is identical — the brute-force
+    // oracle is the proof.
+    val sh = KeyCompaction.compact(graft.llm.TextDedup
+      .shingleTable(documents(s, d), "doc_id", "text", 3), "sh")
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     // rare-first order needs only SOME global total order on
     // (df, shingle) — sorting the per-doc window by the pair directly
@@ -744,23 +728,11 @@ object Llm {
   private[graft] def setsimOverlapJoin(s: SparkSession, d: String,
       sampled: Boolean = false,
       sampleNibbles: Seq[String] = Seq("0")): DataFrame = {
-    // r17 opt: same xxhash64 key compaction + injectivity guard as
-    // setsimPrefixJoin (see the proof there) — every exchange downstream
-    // of the checkpoint carries the 8-byte key instead of the shingle
-    // string; the candidate set may shift with the (df, sid) order but
-    // the verified containment result is identical (brute-force oracle).
-    // LAZY checkpoint materialized by the guard agg (one job, not two —
-    // see setsimPrefixJoin)
-    val shRaw = graft.llm.TextDedup
-      .shingleTable(documents(s, d), "doc_id", "text", 3)
-      .withColumn("sid", xxhash64(col("sh")))
-      .localCheckpoint(false)
-    val keyChk = shRaw.agg(
-      countDistinct(col("sh")).as("nsh"),
-      countDistinct(col("sid")).as("nsid")).head()
-    val sh = if (keyChk.getLong(0) == keyChk.getLong(1))
-        shRaw.select(col("doc_id"), col("sid").as("sh"))
-      else shRaw.select(col("doc_id"), col("sh"))
+    // key compaction as in setsimPrefixJoin: the candidate set may
+    // shift with the (df, sid) order, but the verified containment
+    // result is identical (brute-force oracle)
+    val sh = KeyCompaction.compact(graft.llm.TextDedup
+      .shingleTable(documents(s, d), "doc_id", "text", 3), "sh")
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     val df_ = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
     val wDoc = org.apache.spark.sql.expressions.Window

@@ -30,21 +30,16 @@ class ReusedExchangeSpec extends AnyFunSuite {
 
   test("kcore's round shape: the degree-agg exchange is runtime-reused") {
     // the reuse lives inside each round's `edges` checkpoint ACTION (the
-    // final returned frame reads the last checkpoint), so pin the round
-    // PATTERN itself: one degree agg probed by two semi-joins must plan
-    // a single exchange + a ReusedExchange, or the r16 keep-checkpoint
-    // drop silently doubles the degree work per round
+    // final returned frame reads the last checkpoint), so run the
+    // query's own round over synthetic edges: its degree agg probed by
+    // two semi-joins must plan a single exchange + a ReusedExchange, or
+    // the r16 keep-checkpoint drop silently doubles the degree work per
+    // round
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val edges = (0 until 200).map(i => (i.toLong % 23, (i * 7L) % 29))
       .toDF("ia", "ib").filter(col("ia") =!= col("ib"))
-    val keep = edges.select(col("ia").as("u"))
-      .unionAll(edges.select(col("ib").as("u")))
-      .groupBy(col("u")).agg(count(lit(1)).as("deg"))
-      .filter(col("deg") >= 3).select(col("u"))
-    val round = edges
-      .join(keep.select(col("u").as("ia")), Seq("ia"), "left_semi")
-      .join(keep.select(col("u").as("ib")), Seq("ib"), "left_semi")
+    val round = graft.queries.Corpus.kcoreRound(edges)
     round.collect()
     assert(round.queryExecution.executedPlan.toString
         .contains("ReusedExchange"),
