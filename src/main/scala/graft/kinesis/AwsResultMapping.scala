@@ -29,11 +29,11 @@ object AwsResultMapping {
 
   val ThrottleErrorCode = "ProvisionedThroughputExceededException"
 
-  /** Fold request-ordered entry outcomes into the sink's [[PutResult]]:
-    * `failedIndices` are the positions to rebuild and resend,
-    * `throttledIndices` the subset whose shards the token bucket penalizes
-    * (and that retry on their ORIGINAL explicit hash key so the halved
-    * budget actually paces the hot shard). */
+  /** Fold request-ordered entry outcomes into the sink's [[PutResult]],
+    * which reports failures by position only: `failedIndices` are the
+    * positions to rebuild and resend, `throttledIndices` the subset whose
+    * shards the token bucket penalizes (and that retry on their ORIGINAL
+    * explicit hash key so the halved budget actually paces the hot shard). */
   def toPutResult(outcomes: Seq[EntryOutcome]): PutResult = {
     val shardIds = outcomes.flatMap(_.shardId)
     val failed = outcomes.zipWithIndex.collect {
@@ -42,27 +42,17 @@ object AwsResultMapping {
     val throttled = outcomes.zipWithIndex.collect {
       case (EntryOutcome(_, Some(code)), i) if code == ThrottleErrorCode => i
     }
-    PutResult(
-      failedRecordCount = failed.size,
-      shardIds = shardIds,
-      throttledRecordCount = throttled.size,
-      failedIndices = failed,
-      throttledIndices = throttled)
+    PutResult(shardIds, failed, throttled)
   }
 
   /** Whole-call failure (SDK threw before a response existed — connection
-    * reset, 5xx after SDK-internal retries, credentials): every entry is
-    * failed, and `LimitExceededException`/throughput-shaped throwables are
-    * treated as throttles so the back-off still engages. */
+    * reset, 5xx after SDK-internal retries, credentials): every position
+    * is in `failedIndices`, and `LimitExceededException`/throughput-shaped
+    * throwables are treated as throttles so the back-off still engages. */
   def toPutResult(entryCount: Int, exceptionClass: String): PutResult = {
     val all = 0 until entryCount
     val throttle = exceptionClass.contains("ProvisionedThroughputExceeded") ||
       exceptionClass.contains("LimitExceeded")
-    PutResult(
-      failedRecordCount = entryCount,
-      shardIds = Seq.empty,
-      throttledRecordCount = if (throttle) entryCount else 0,
-      failedIndices = all,
-      throttledIndices = if (throttle) all else Seq.empty)
+    PutResult(Seq.empty, all, if (throttle) all else Seq.empty)
   }
 }

@@ -10,18 +10,18 @@ import org.apache.spark.sql.functions.col
   * (reference: `AggRecord.java:186-193`). */
 final case class PutEntry(partitionKey: String, explicitHashKey: String, data: Array[Byte])
 
-final case class PutResult(failedRecordCount: Int, shardIds: Seq[String],
-    /** of the failures, how many were ProvisionedThroughputExceeded —
-      * the signal the adaptive throttle backs off on */
-    throttledRecordCount: Int = 0,
-    /** positions of the failed entries within the call (PutRecords
-      * reports per-record results in request order); empty with
-      * failedRecordCount > 0 means "treat the whole call as failed" */
+/** Outcome of one PutRecords call. PutRecords reports per-record results
+  * in request order, so failures are positions within the call:
+  * `failedIndices` are the entries to rebuild and resend, and
+  * `throttledIndices` the subset that failed with
+  * ProvisionedThroughputExceeded — the back-off penalty lands only on
+  * those shards. `shardIds` are the shards of the delivered entries. */
+final case class PutResult(shardIds: Seq[String],
     failedIndices: Seq[Int] = Seq.empty,
-    /** of `failedIndices`, which failed with ProvisionedThroughputExceeded
-      * (PutRecords reports the error code per record) — the back-off
-      * penalty must land only on the shards that were actually hot */
-    throttledIndices: Seq[Int] = Seq.empty)
+    throttledIndices: Seq[Int] = Seq.empty) {
+  def failedRecordCount: Int = failedIndices.size
+  def throttledRecordCount: Int = throttledIndices.size
+}
 
 /** Transport boundary. The AWS SDK is not resolvable offline (and the
   * engine is cloud-agnostic); production would implement this with
@@ -42,17 +42,24 @@ trait PutRecordsTransport extends Serializable {
   * serializes task closures even under `local[*]`, so instance fields
   * would silo state per task copy — the static map keeps all task copies
   * and the driver looking at the same stream (single-JVM test transport).
+  * This file is the only code that touches that state; readers go through
+  * [[InMemoryKinesis.shards]] and [[InMemoryKinesis.aggregates]].
   */
 object InMemoryKinesis {
   /** One shard's metadata: hash range, lineage, and — once closed by a
     * split/merge — the aggregate count at close time (a consumer must
     * drain exactly that many before reading the children). */
-  private[kinesis] final case class ShardMeta(
+  private final case class ShardMeta(
       lo: BigInteger, hi: BigInteger,
       parents: Seq[String],
       closedAt: Option[Int])
 
-  private[kinesis] final class State {
+  /** One shard as a [[shards]] snapshot saw it: its metadata plus the
+    * number of aggregates stored in it so far. */
+  private[kinesis] final case class Shard(id: String, lo: BigInteger, hi: BigInteger,
+      parents: Seq[String], closedAt: Option[Int], stored: Int)
+
+  private final class State {
     val calls = new AtomicLong(0)
     val recordSeq = new AtomicLong(0)
     val received = new ConcurrentHashMap[String, java.util.List[Array[Byte]]]()
@@ -65,8 +72,35 @@ object InMemoryKinesis {
     }
   }
   private val registry = new ConcurrentHashMap[String, State]()
-  private[kinesis] def state(id: String): State =
+  private def state(id: String): State =
     registry.computeIfAbsent(id, _ => new State)
+
+  /** Every shard of stream `id` in creation order, taken under the
+    * shard-table lock so lineage, counts at close and stored counts agree.
+    * A stream no [[InMemoryKinesis]] has used yet has no shards, and
+    * reading it creates none. */
+  private[kinesis] def shards(id: String): Seq[Shard] = {
+    val s = registry.get(id)
+    if (s == null) Seq.empty else snapshot(s)
+  }
+
+  private def snapshot(s: State): Seq[Shard] = s.shards.synchronized {
+    import scala.jdk.CollectionConverters._
+    // iterator (not entrySet().asScala, a Set) preserves insertion order
+    s.shards.entrySet().iterator().asScala.map { e =>
+      val m = e.getValue
+      Shard(e.getKey, m.lo, m.hi, m.parents, m.closedAt, s.sizeOf(e.getKey))
+    }.toVector
+  }
+
+  /** The aggregates stored at positions [from, until) of one shard (fewer
+    * if it holds fewer). */
+  private[kinesis] def aggregates(id: String, shard: String, from: Int, until: Int): Seq[Array[Byte]] = {
+    val s = registry.get(id)
+    val list = if (s == null) null else s.received.get(shard)
+    if (list == null) Seq.empty
+    else list.synchronized((from until math.min(until, list.size)).map(list.get))
+  }
 }
 
 final class InMemoryKinesis(numShards: Int, failEvery: Int = 0,
@@ -91,17 +125,11 @@ final class InMemoryKinesis(numShards: Int, failEvery: Int = 0,
   }
   def received: ConcurrentHashMap[String, java.util.List[Array[Byte]]] = st.received
 
-  private def shardSeq(s: InMemoryKinesis.State): Seq[(String, ShardMeta)] =
-    s.shards.synchronized {
-      import scala.jdk.CollectionConverters._
-      // iterator (not entrySet().asScala, a Set) preserves insertion order
-      s.shards.entrySet().iterator().asScala.map(e => e.getKey -> e.getValue).toSeq
-    }
+  private def shards: Seq[InMemoryKinesis.Shard] = InMemoryKinesis.snapshot(st)
 
   override def page(streamName: String, token: Option[String]): (Seq[ShardInfo], Boolean) = {
-    val all = shardSeq(st).map { case (sid, m) =>
-      ShardInfo(sid, m.lo.toString, m.hi.toString,
-        m.closedAt.map(_.toString), m.parents)
+    val all = shards.map { s =>
+      ShardInfo(s.id, s.lo.toString, s.hi.toString, s.closedAt.map(_.toString), s.parents)
     }
     // two pages to exercise the pagination path
     token match {
@@ -112,10 +140,8 @@ final class InMemoryKinesis(numShards: Int, failEvery: Int = 0,
 
   private def shardFor(ehk: String): String = {
     val k = new BigInteger(ehk)
-    shardSeq(st).collectFirst {
-      case (sid, m) if m.closedAt.isEmpty &&
-        k.compareTo(m.lo) >= 0 && k.compareTo(m.hi) <= 0 => sid
-    }.getOrElse(throw new IllegalStateException(s"no open shard covers $ehk"))
+    shards.find(s => s.closedAt.isEmpty && k.compareTo(s.lo) >= 0 && k.compareTo(s.hi) <= 0)
+      .getOrElse(throw new IllegalStateException(s"no open shard covers $ehk")).id
   }
 
   /** Split an open shard at its range midpoint: the parent closes at its
@@ -157,12 +183,12 @@ final class InMemoryKinesis(numShards: Int, failEvery: Int = 0,
     val s = st
     val n = s.calls.incrementAndGet()
     if (failEvery > 0 && n % failEvery == 0)
-      return PutResult(entries.size, Seq.empty, failedIndices = entries.indices)
+      return PutResult(Seq.empty, failedIndices = entries.indices)
     if (throttleEvery > 0 && n % throttleEvery == 0)
-      return PutResult(entries.size, Seq.empty, throttledRecordCount = entries.size,
-        failedIndices = entries.indices, throttledIndices = entries.indices)
+      return PutResult(Seq.empty, failedIndices = entries.indices,
+        throttledIndices = entries.indices)
     val failed = Seq.newBuilder[Int]
-    val shards = entries.zipWithIndex.map { case (e, i) =>
+    val shardIds = entries.zipWithIndex.map { case (e, i) =>
       val rec = s.recordSeq.incrementAndGet()
       if (failRecordEvery > 0 && rec % failRecordEvery == 0) {
         failed += i
@@ -174,8 +200,7 @@ final class InMemoryKinesis(numShards: Int, failEvery: Int = 0,
         sid
       }
     }
-    val f = failed.result()
-    PutResult(f.size, shards.filter(_.nonEmpty), failedIndices = f)
+    PutResult(shardIds.filter(_.nonEmpty), failedIndices = failed.result())
   }
 }
 
@@ -274,19 +299,10 @@ object KinesisSinkSemantics {
       val (failedIdx: Seq[Int], throttledIdx: Set[Int]) =
         try {
           val res = transport.putRecords(cfg.streamName, entries)
-          val idx =
-            if (res.failedRecordCount == 0) Seq.empty
-            else if (res.failedIndices.nonEmpty) res.failedIndices
-            else entries.indices // transport can't say which: retry all
-          // penalize exactly the throttled shards; a transport that can
-          // only count throttles (no indices) penalizes all failures —
-          // safe now that those keys are reused on the retry
-          val thr: Set[Int] =
-            if (res.throttledRecordCount == 0) Set.empty
-            else if (res.throttledIndices.nonEmpty) res.throttledIndices.toSet
-            else idx.toSet
+          val thr = res.throttledIndices.toSet
+          // penalize exactly the throttled shards
           thr.foreach(i => cfg.throttle.foreach(_.onThrottled(entries(i).explicitHashKey)))
-          (idx, thr)
+          (res.failedIndices, thr)
         } catch { case scala.util.control.NonFatal(_) => (entries.indices, Set.empty[Int]) }
       if (failedIdx.nonEmpty) {
         if (failCount >= cfg.maxRetries)

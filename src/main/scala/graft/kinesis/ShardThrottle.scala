@@ -11,7 +11,10 @@ import java.util.concurrent.ConcurrentHashMap
   * errors out of PutRecords.
   *
   * Shards are keyed by the explicit hash key the router draws (one
-  * midpoint EHK per open shard, so the key identifies the shard).
+  * midpoint EHK per open shard, so the key identifies the shard). Every
+  * key, a re-rolled retry's included, comes from the listed open-shard
+  * midpoints, so a throttle id holds at most one bucket per shard ever
+  * listed and buckets are never evicted.
   *
   * Scope: per-JVM. Buckets live in a static registry keyed by throttle id
   * (the same single-JVM pattern as [[InMemoryKinesis]]) so every task in
@@ -29,10 +32,7 @@ final class ShardThrottle(
     bytesPerSec: Long = 1L << 20,
     recordsPerSec: Long = 1000L,
     nanoTime: () => Long = () => System.nanoTime(),
-    sleep: Long => Unit = ms => Thread.sleep(ms),
-    /** drop buckets idle this long — retries re-roll EHKs, so abandoned
-      * keys would otherwise accumulate for the life of the executor JVM */
-    idleEvictMillis: Long = 10000L) extends Serializable {
+    sleep: Long => Unit = ms => Thread.sleep(ms)) extends Serializable {
 
   import ShardThrottle._
 
@@ -65,10 +65,9 @@ final class ShardThrottle(
         } else {
           val msForBytes = (needBytes - b.bytes) * 1000.0 / bps
           val msForRecs = (needRecs - b.records) * 1000.0 / rps
-          // sleep in ≤1 s slices: each loop iteration refills (touching
-          // lastNanos), so a bucket someone is actively waiting on can
-          // never look idle to the eviction sweep — and waits react to
-          // factor recovery within a second instead of oversleeping
+          // sleep in ≤1 s slices: each loop iteration refills, so a wait
+          // reacts to the factor's additive recovery within a second
+          // instead of oversleeping the budget computed before it
           val ms = math.min(1000L,
             math.max(1L, math.ceil(math.max(msForBytes, msForRecs)).toLong))
           b.waitedMs += ms
@@ -83,19 +82,11 @@ final class ShardThrottle(
     waited
   }
 
-  /** Total milliseconds this throttle id has spent blocked (all shards),
-    * including buckets since evicted. */
+  /** Total milliseconds this throttle id has spent blocked (all shards). */
   def totalWaitMillis: Long = {
-    var sum = evictedWaitMs.getOrDefault(id, 0L)
+    var sum = 0L
     registry.forEach { (k, b) => if (k._1 == id) sum += b.synchronized(b.waitedMs) }
     sum
-  }
-
-  /** Live bucket count for this throttle id (eviction observability). */
-  def bucketCount: Int = {
-    var n = 0
-    registry.forEach { (k, _) => if (k._1 == id) n += 1 }
-    n
   }
 
   /** The service throttled this shard (ProvisionedThroughputExceeded):
@@ -115,7 +106,9 @@ final class ShardThrottle(
   }
 
   private def bucketOf(shardKey: String): Bucket =
-    bucket(id, shardKey, bytesPerSec, recordsPerSec, nanoTime(), idleEvictMillis * 1000000L)
+    registry.computeIfAbsent((id, shardKey),
+      // start full: Kinesis permits a one-second burst to the cap
+      _ => new Bucket(bytesPerSec.toDouble, recordsPerSec.toDouble, nanoTime()))
 
   private def refill(b: Bucket): Unit = {
     val now = nanoTime()
@@ -140,33 +133,4 @@ object ShardThrottle {
     var factor: Double = 1.0
   }
   private val registry = new ConcurrentHashMap[(String, String), Bucket]()
-  /** waited-ms carried over from evicted buckets, per throttle id */
-  private val evictedWaitMs = new ConcurrentHashMap[String, Long]()
-  private def bucket(id: String, shardKey: String, bps: Long, rps: Long,
-      now: Long, idleNanos: Long): Bucket = {
-    var created = false
-    val b = registry.computeIfAbsent((id, shardKey),
-      // start full: Kinesis permits a one-second burst to the cap
-      _ => { created = true; new Bucket(bps.toDouble, rps.toDouble, now) })
-    // sweep on the growth path only: new keys appear when retries re-roll
-    // EHKs, which is exactly when abandoned buckets accumulate. A shard
-    // an executor hasn't touched for `idleNanos` (by this id's clock) has
-    // nothing worth keeping: its budget is refilled and its back-off
-    // factor recovered within ~10 s anyway.
-    if (created) {
-      val it = registry.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if ((e.getKey._1 == id) && (e.getValue ne b)) {
-          val v = e.getValue
-          val (idleFor, waited) = v.synchronized((now - v.lastNanos, v.waitedMs))
-          if (idleFor > idleNanos) {
-            evictedWaitMs.merge(id, waited, (a, bb) => a + bb)
-            it.remove()
-          }
-        }
-      }
-    }
-    b
-  }
 }

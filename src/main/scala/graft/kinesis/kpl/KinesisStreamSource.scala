@@ -5,12 +5,12 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import graft.kinesis.{AggRecordCodec, InMemoryKinesis}
+import graft.kinesis.InMemoryKinesis
 
 /** Structured Streaming source with Kinesis consumer semantics
   * (BASELINE.json's "Structured Streaming + Kinesis source"): micro-batch
@@ -23,10 +23,14 @@ import graft.kinesis.{AggRecordCodec, InMemoryKinesis}
   * reader, yielding one row per user record:
   * (shard_id, agg_seq, partition_key, explicit_hash_key, data).
   *
-  * Backed by [[InMemoryKinesis]] (addressed via option `kinesis.id`) —
-  * the production path would implement the same two classes over
-  * GetShardIterator/GetRecords; offsets, planning, and decode are
-  * transport-independent.
+  * What the source needs from a stream is two calls on
+  * [[InMemoryKinesis]] (addressed via option `kinesis.id`):
+  * `InMemoryKinesis.shards`, one snapshot of every shard's parents, count
+  * at close and stored-aggregate count, which drives the offsets and the
+  * parent-before-child gate; and `InMemoryKinesis.aggregates`, a read of
+  * one shard's aggregate range, which the reader decodes. Offsets,
+  * planning and decode use nothing else, so a binding over
+  * ListShards/GetShardIterator/GetRecords replaces only those two calls.
   * Usage: {{{
   *   spark.readStream.format("graft.kinesis.kpl.KinesisStreamSource")
   *     .option("kinesis.id", stream.id).load()
@@ -49,28 +53,14 @@ object KinesisStreamSource {
     StructField("explicit_hash_key", StringType, nullable = false),
     StructField("data", BinaryType, nullable = false)))
 
-  /** shard → number of aggregates currently readable. */
-  private[kpl] def shardSizes(id: String): Map[String, Int] = {
-    import scala.jdk.CollectionConverters._
-    InMemoryKinesis.state(id).received.asScala.map { case (k, v) => k -> v.size }.toMap
-  }
-
-  /** shard → (parent ids, count-at-close if closed) — the lineage the
-    * parent-before-child gate in [[KinesisMicroBatchStream]] consults. */
-  private[kpl] def shardLineage(id: String): Map[String, (Seq[String], Option[Int])] = {
-    val st = InMemoryKinesis.state(id)
-    st.shards.synchronized {
-      import scala.jdk.CollectionConverters._
-      st.shards.entrySet().iterator().asScala
-        .map(e => e.getKey -> (e.getValue.parents, e.getValue.closedAt)).toMap
-    }
-  }
-  private[kpl] def slice(id: String, shard: String, from: Int, until: Int): Seq[Array[Byte]] = {
-    val list = InMemoryKinesis.state(id).received.get(shard)
-    if (list == null) Seq.empty
-    else list.synchronized {
-      (from until math.min(until, list.size)).map(list.get)
-    }
+  /** One row per user record of the range's aggregates, in shard order. */
+  private[kpl] def read(range: KinesisShardRange): Iterator[InternalRow] = {
+    val shardUtf8 = UTF8String.fromString(range.shard)
+    InMemoryKinesis.aggregates(range.id, range.shard, range.from, range.until)
+      .iterator.zipWithIndex.flatMap { case (wire, i) =>
+        KplRows.decode(wire)((pk, ehk, data) =>
+          new GenericInternalRow(Array[Any](shardUtf8, range.from + i, pk, ehk, data)))
+      }
   }
 }
 
@@ -120,16 +110,14 @@ final class KinesisMicroBatchStream(id: String) extends MicroBatchStream
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val done = start.asInstanceOf[ShardCursors].cursors
-    val sizes = KinesisStreamSource.shardSizes(id)
-    val lineage = KinesisStreamSource.shardLineage(id)
-    ShardCursors(sizes.map { case (shard, size) =>
-      val parents = lineage.get(shard).map(_._1).getOrElse(Seq.empty)
-      val parentsDrained = parents.forall { p =>
-        lineage.get(p).flatMap(_._2)
-          .exists(closedAt => done.getOrElse(p, 0) >= closedAt)
+    val shards = InMemoryKinesis.shards(id)
+    val closedAt = shards.map(s => s.id -> s.closedAt).toMap
+    ShardCursors(shards.filter(_.stored > 0).map { s =>
+      val parentsDrained = s.parents.forall { p =>
+        closedAt.get(p).flatten.exists(done.getOrElse(p, 0) >= _)
       }
-      shard -> (if (parentsDrained) size else done.getOrElse(shard, 0))
-    })
+      s.id -> (if (parentsDrained) s.stored else done.getOrElse(s.id, 0))
+    }.toMap)
   }
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
   override def latestOffset(): Offset =
@@ -150,31 +138,9 @@ final class KinesisMicroBatchStream(id: String) extends MicroBatchStream
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    (p: InputPartition) => new KinesisShardReader(p.asInstanceOf[KinesisShardRange])
+    (p: InputPartition) =>
+      new KplRows.Reader(KinesisStreamSource.read(p.asInstanceOf[KinesisShardRange]))
 }
 
 final case class KinesisShardRange(id: String, shard: String, from: Int, until: Int)
   extends InputPartition
-
-final class KinesisShardReader(range: KinesisShardRange) extends PartitionReader[InternalRow] {
-  private lazy val rows: Iterator[InternalRow] = {
-    val shardUtf8 = UTF8String.fromString(range.shard)
-    KinesisStreamSource.slice(range.id, range.shard, range.from, range.until)
-      .iterator.zipWithIndex.flatMap { case (wire, i) =>
-        val agg = AggRecordCodec.decode(wire)
-        agg.records.iterator.map { r =>
-          new GenericInternalRow(Array[Any](
-            shardUtf8,
-            range.from + i,
-            UTF8String.fromString(agg.partitionKeyTable(r.pkIndex)),
-            UTF8String.fromString(agg.explicitHashKeyTable(r.ehkIndex)),
-            r.data))
-        }
-      }
-  }
-  private var current: InternalRow = _
-  override def next(): Boolean =
-    if (rows.hasNext) { current = rows.next(); true } else false
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
-}

@@ -129,12 +129,9 @@ final class KplScan(path: String, conf: SerializableHadoopConf)
 final case class KplReaderFactory(conf: SerializableHadoopConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new KplPartitionReader(partition.asInstanceOf[KplFilePartition].file, conf)
-}
+    new KplRows.Reader(readFile(partition.asInstanceOf[KplFilePartition].file))
 
-final class KplPartitionReader(file: String, conf: SerializableHadoopConf)
-    extends PartitionReader[InternalRow] {
-  private lazy val rows: Iterator[InternalRow] = {
+  private def readFile(file: String): Iterator[InternalRow] = {
     val p = new org.apache.hadoop.fs.Path(file)
     val fs = p.getFileSystem(conf.value)
     val len = fs.getFileStatus(p).getLen
@@ -143,19 +140,32 @@ final class KplPartitionReader(file: String, conf: SerializableHadoopConf)
     val bytes = new Array[Byte](len.toInt)
     val in = fs.open(p)
     try in.readFully(0L, bytes) finally in.close()
-    val agg = AggRecordCodec.decode(bytes)
     val fileUtf8 = UTF8String.fromString(file)
-    agg.records.iterator.map { r =>
-      new GenericInternalRow(Array[Any](
-        UTF8String.fromString(agg.partitionKeyTable(r.pkIndex)),
-        UTF8String.fromString(agg.explicitHashKeyTable(r.ehkIndex)),
-        r.data,
-        fileUtf8))
-    }
+    KplRows.decode(bytes)((pk, ehk, data) =>
+      new GenericInternalRow(Array[Any](pk, ehk, data, fileUtf8)))
   }
-  private var current: InternalRow = _
-  override def next(): Boolean =
-    if (rows.hasNext) { current = rows.next(); true } else false
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
+}
+
+/** What both KPL readers share: the decode of one aggregate into rows and
+  * a [[PartitionReader]] over a lazily built row iterator. */
+private[kpl] object KplRows {
+  /** Decode wire bytes (KPL magic ‖ protobuf ‖ MD5) into one row per user
+    * record, laid out by `row(partitionKey, explicitHashKey, data)`. Each
+    * key table is converted to `UTF8String` once per aggregate. */
+  def decode(wire: Array[Byte])(
+      row: (UTF8String, UTF8String, Array[Byte]) => InternalRow): Iterator[InternalRow] = {
+    val agg = AggRecordCodec.decode(wire)
+    val pks = agg.partitionKeyTable.map(UTF8String.fromString)
+    val ehks = agg.explicitHashKeyTable.map(UTF8String.fromString)
+    agg.records.iterator.map(r => row(pks(r.pkIndex), ehks(r.ehkIndex), r.data))
+  }
+
+  final class Reader(rows: => Iterator[InternalRow]) extends PartitionReader[InternalRow] {
+    private lazy val it = rows
+    private var current: InternalRow = _
+    override def next(): Boolean =
+      if (it.hasNext) { current = it.next(); true } else false
+    override def get(): InternalRow = current
+    override def close(): Unit = ()
+  }
 }

@@ -55,6 +55,6 @@ class AwsResultMappingSpec extends AnyFunSuite {
 
   test("empty response maps to the zero result") {
     val r = toPutResult(Seq.empty)
-    assert(r === PutResult(0, Seq.empty))
+    assert(r === PutResult(Seq.empty))
   }
 }

@@ -1,6 +1,9 @@
 package graft.kinesis
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 import graft.kinesis.kpl.{KinesisStreamSource, ShardCursors}
@@ -20,6 +23,31 @@ class KinesisStreamSourceSpec extends AnyFunSuite {
       .repartition(3)
     KinesisSinkSemantics.write(df, "payload", k, k, cfg)
     ()
+  }
+
+  private def putOne(k: InMemoryKinesis, ehk: String, msg: String): Unit = {
+    val b = new AggRecordCodec.Builder
+    assert(b.add("a", Some(ehk), msg.getBytes("UTF-8")))
+    val agg = b.clearAndGet().get
+    assert(k.putRecords("s", Seq(PutEntry(agg.partitionKey,
+      agg.explicitHashKey, agg.toRecordBytes))).failedRecordCount == 0)
+  }
+
+  /** Run the source on `k` to completion from `checkpoint`, adding each
+    * row's (batch id, shard, data) to `into`. */
+  private def drain(k: InMemoryKinesis, checkpoint: String,
+      into: ConcurrentLinkedQueue[(Long, String, String)]): Unit = {
+    val q = spark.readStream.format(KinesisStreamSource.Name)
+      .option("kinesis.id", k.id).load()
+      .writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (df: DataFrame, batchId: Long) =>
+        df.select(col("shard_id"), col("data").cast("string")).as[(String, String)]
+          .collect().foreach { case (shard, data) => into.add((batchId, shard, data)) }
+        ()
+      }
+      .start()
+    try q.processAllAvailable() finally q.stop()
   }
 
   test("offset json round trip") {
@@ -181,5 +209,51 @@ class KinesisStreamSourceSpec extends AnyFunSuite {
       val counts = spark.table("kinesis_agg").as[(Long, Long)].collect().toMap
       assert(counts == (0L until 10L).map(_ -> 10L).toMap)
     } finally q.stop()
+  }
+
+  test("a source attached to a never-written stream reads nothing and creates no shards") {
+    val id = "never-written-" + java.util.UUID.randomUUID()
+    val stream = new kpl.KinesisMicroBatchStream(id)
+    assert(stream.latestOffset(stream.initialOffset(), stream.getDefaultReadLimit) ==
+      ShardCursors(Map.empty))
+    assert(InMemoryKinesis.shards(id).isEmpty)
+    // the stream's own first use still lays out its shards
+    assert(ShardModel.allShards("s", new InMemoryKinesis(numShards = 3, id = id)).size == 3)
+  }
+
+  test("restart on the same checkpoint: every record exactly once across both runs") {
+    val k = new InMemoryKinesis(numShards = 4)
+    val checkpoint = java.nio.file.Files.createTempDirectory("kinesis_restart_chk").toString
+    val rows = new ConcurrentLinkedQueue[(Long, String, String)]()
+    val wave1 = (0 until 300).map(i => s"wave1-$i")
+    val wave2 = (0 until 200).map(i => s"wave2-$i")
+    sink(k, wave1)
+    drain(k, checkpoint, rows)
+    assert(rows.asScala.map(_._3).toSeq.sorted == wave1.sorted)
+    sink(k, wave2)
+    drain(k, checkpoint, rows)
+    assert(rows.asScala.map(_._3).toSeq.sorted == (wave1 ++ wave2).sorted)
+  }
+
+  test("restart across a split: the rest of the parent arrives before any child row") {
+    val k = new InMemoryKinesis(numShards = 1)
+    val parent = "shardId-000000000000"
+    val checkpoint = java.nio.file.Files.createTempDirectory("kinesis_split_chk").toString
+    val rows = new ConcurrentLinkedQueue[(Long, String, String)]()
+    val ehk = ShardModel.explicitHashKeys("s", k).head
+    putOne(k, ehk, "parent-1"); putOne(k, ehk, "parent-2")
+    drain(k, checkpoint, rows)
+    val firstRun = rows.size
+    assert(firstRun == 2)
+    putOne(k, ehk, "parent-3"); putOne(k, ehk, "parent-4")
+    val (c1, c2) = k.splitShard(parent)
+    ShardModel.explicitHashKeys("s", k).foreach(e => putOne(k, e, s"child-$e"))
+    drain(k, checkpoint, rows)
+    val second = rows.asScala.toSeq.drop(firstRun)
+    val (fromParent, fromChildren) = second.partition(_._2 == parent)
+    assert(fromParent.map(_._3).sorted == Seq("parent-3", "parent-4"))
+    assert(fromChildren.map(_._2).toSet == Set(c1, c2) && fromChildren.size == 2)
+    assert(fromParent.map(_._1).max < fromChildren.map(_._1).min,
+      s"child rows must arrive strictly after the parent is drained: $second")
   }
 }

@@ -111,10 +111,10 @@ class SinkSpec extends AnyFunSuite {
     val flakyOnce = new PutRecordsTransport {
       override def putRecords(s: String, e: Seq[PutEntry]): PutResult = {
         calls += 1
-        if (calls == 1) PutResult(e.size, Seq.empty) // fail the original send
+        if (calls == 1) PutResult(Seq.empty, failedIndices = e.indices) // fail the original send
         else {
           delivered ++= e.map(x => AggRecordCodec.decode(x.data).numUserRecords)
-          PutResult(0, e.map(_ => "x"))
+          PutResult(e.map(_ => "x"))
         }
       }
     }
@@ -140,9 +140,8 @@ class SinkSpec extends AnyFunSuite {
       override def putRecords(s: String, e: Seq[PutEntry]): PutResult = {
         callEhks.synchronized { callEhks += e.map(_.explicitHashKey) }
         if (callEhks.size == 1) // first call: only the middle entry throttles
-          PutResult(1, Seq("x"), throttledRecordCount = 1,
-            failedIndices = Seq(1), throttledIndices = Seq(1))
-        else PutResult(0, e.map(_ => "x"))
+          PutResult(Seq("x"), failedIndices = Seq(1), throttledIndices = Seq(1))
+        else PutResult(e.map(_ => "x"))
       }
     }
     val router = new ShardModel.Router(Array("777"), 1L) // a re-roll would draw 777
@@ -164,8 +163,8 @@ class SinkSpec extends AnyFunSuite {
     val transport = new PutRecordsTransport {
       override def putRecords(s: String, e: Seq[PutEntry]): PutResult = {
         callEhks.synchronized { callEhks += e.map(_.explicitHashKey) }
-        if (callEhks.size == 1) PutResult(1, Seq.empty, failedIndices = Seq(0))
-        else PutResult(0, e.map(_ => "x"))
+        if (callEhks.size == 1) PutResult(Seq.empty, failedIndices = Seq(0))
+        else PutResult(e.map(_ => "x"))
       }
     }
     KinesisSinkSemantics.sendGroupWithRetry(Seq(batch), transport,
@@ -177,7 +176,7 @@ class SinkSpec extends AnyFunSuite {
   test("permanent failure: bounded retries then gives up (no reference infinite loop)") {
     val alwaysFail = new PutRecordsTransport {
       override def putRecords(s: String, e: Seq[PutEntry]): PutResult =
-        PutResult(e.size, Seq.empty)
+        PutResult(Seq.empty, failedIndices = e.indices)
     }
     val router = new ShardModel.Router(Array("1", "2"), 1L)
     val b = new AggRecordCodec.Builder
@@ -206,13 +205,34 @@ class SinkSpec extends AnyFunSuite {
     val size = Gen.frequency(9 -> Gen.chooseNum(1, 2000), 1 -> Gen.chooseNum(100001, 400000))
     val gen = for {
       failEvery <- every; throttleEvery <- every; failRecordEvery <- every
+      throwEvery <- every; throwPhase <- Gen.chooseNum(0, 8)
+      throwAfter <- Gen.oneOf(false, true)
       sizes <- Gen.chooseNum(1, 40).flatMap(Gen.listOfN(_, size))
-    } yield (failEvery, throttleEvery, failRecordEvery, sizes)
-    Check.okNoShrink(gen, minTests = 200) { case (fe, te, fre, sizes) =>
+    } yield (failEvery, throttleEvery, failRecordEvery, throwEvery, throwPhase, throwAfter, sizes)
+    Check.okNoShrink(gen, minTests = 200) { case (fe, te, fre, xe, phase, after, sizes) =>
       val k = new InMemoryKinesis(numShards = 8, failEvery = fe, throttleEvery = te,
         failRecordEvery = fre)
+      // every xe-th call throws before delegating (nothing delivered), or,
+      // in the other half of the cases, every xe-th call the stream fully
+      // accepted throws after delegating (delivered, but the sink resends
+      // it: at-least-once duplicates). Counting only accepted calls keeps
+      // the schedule from interlocking with the stream's own periodic
+      // faults into a failure on every call (xe = 2 against
+      // throttleEvery = 2 would). Counting starts at a random phase: most
+      // cases make one call plus its retries, so a count from 0 would
+      // rarely reach xe.
+      val throwing = new PutRecordsTransport {
+        private var calls = phase
+        private def due(): Boolean = { calls += 1; xe > 0 && calls % xe == 0 }
+        override def putRecords(s: String, e: Seq[PutEntry]): PutResult = {
+          if (!after && due()) throw new java.io.IOException("connection reset")
+          val r = k.putRecords(s, e)
+          if (after && r.failedIndices.isEmpty && due()) throw new java.io.IOException("response lost")
+          r
+        }
+      }
       val in = sizes.zipWithIndex.map { case (n, i) => Array.tabulate[Byte](n)(j => (i * 31 + j).toByte) }
-      val n = KinesisSinkSemantics.writePartition(in.iterator, k,
+      val n = KinesisSinkSemantics.writePartition(in.iterator, throwing,
         ShardModel.explicitHashKeys("t", k),
         KinesisSinkSemantics.Config("t", maxRetries = 1000, backoffMillis = 0))
       val stored = k.received.values.asScala.toSeq.flatMap(_.asScala)

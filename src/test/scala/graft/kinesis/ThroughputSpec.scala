@@ -83,25 +83,6 @@ class ThroughputSpec extends AnyFunSuite {
     assert(t.factorOf("s") == 1.0, "factor must recover to full")
   }
 
-  test("idle buckets are evicted on new-key creation; waited ms survive") {
-    var now = 0L
-    val t = new ShardThrottle("t-" + System.nanoTime(),
-      bytesPerSec = 1 << 20, recordsPerSec = 1000,
-      nanoTime = () => now, sleep = ms => now += ms * 1000000L,
-      idleEvictMillis = 5000)
-    val mib = 1 << 20
-    t.acquire("k1", mib)
-    val w = t.acquire("k1", mib) // records ~1 s of wait on k1
-    assert(w > 0 && t.bucketCount == 1)
-    now += 20L * 1000 * 1000000 // k1 idle well past the TTL
-    t.acquire("k2", 1)          // fresh key (a re-rolled EHK) → sweep
-    assert(t.bucketCount == 1, "idle bucket must be evicted on growth")
-    assert(t.totalWaitMillis == w, "evicted bucket's waited ms were dropped")
-    // an active key is never swept: k2 stays while another key appears
-    t.acquire("k3", 1)
-    assert(t.bucketCount == 2)
-  }
-
   test("sink informs the throttle on ProvisionedThroughputExceeded") {
     var now = 0L
     val throttle = new ShardThrottle("t-" + System.nanoTime(),
